@@ -1,14 +1,17 @@
-"""Connected components via alternating large-star/small-star DataFrame joins.
+"""Connected components via alternating large-star/small-star DataFrame rounds.
 
 The reference stops at candidate ids + match counts (ssi.h); clustering is
 the thin layer the north rule adds.  We use the Kiveris et al. (2014)
 "Connected Components in MapReduce" alternating algorithm, which converges in
 O(log n) rounds even on giant near-clique components, expressed purely as
-groupBy + join (no GraphX/RDD, per north rule).
+DataFrame operations (no GraphX/RDD, per north rule).
 
-Each round is two phases; both avoid collect_list on neighborhoods (a
-boilerplate component's min-node can have degree ~ component size, which
-would OOM a collected list):
+Each round is two phases, each ONE exchange: a min-over-neighborhood
+window partitioned by u, then a distinct.  Neither collects a
+neighborhood into a list, but the window buffers all of u's rows in one
+partition — a boilerplate component's min-node can have degree ~
+component size, so that node is a single-task straggler (no map-side
+partial aggregation, no AQE skew split):
 
   large-star: m(u) = min over N(u) ∪ {u};  emit (v, m(u)) for v in N(u), v > u
   small-star: over edges oriented low<-high: m(u) = min(N<(u) ∪ {u});

@@ -4,16 +4,23 @@ Stages (each checkpointable, each with counters):
 
   conv       transcripts -> one row per conversation (stable turn ordering,
              full-text hash, sorted distinct shingle-hash array) — 1 shuffle
-  sig        one-perm MinHash registers from the shingle array (0 shuffles)
-             + optimal densification (pandas UDF over 1 row/conv)
+  sig        one-perm MinHash registers from the shingle array + optimal
+             densification in one map-only numpy kernel (0 shuffles)
   exact      full-text-hash groups -> star edges (catches 0-shingle convs)
   cands      LSH bands (rpr registers/band) -> capped buckets -> pairs
-  verify     MinHash pre-filter (j_est >= tau_pre) then EXACT shingle-set
-             Jaccard via array_intersect (conversations are bounded, so the
-             exact set fits the row) -> pairs with j >= tau
+  verify     optional MinHash pre-filter (j_est >= tau_pre; auto policy in
+             DedupConfig) then EXACT shingle-set Jaccard via
+             array_intersect (conversations are bounded, so the exact set
+             fits the row) -> pairs with j >= tau
   substr     winnowing fingerprints -> long-shared-substring pairs
   cc         alternating large/small-star connected components
   clusters   every conv labeled; non-dup convs are their own cluster
+
+DedupPipeline.run(transcripts) builds conv and hands it to run_from_conv,
+which runs every later stage.  document_clusters (the flagship
+__spark_entry__.entry()) builds a conv table from a flat documents table
+instead — word-level shingles, one document per conversation — and runs
+the same run_from_conv: there is one clustering path.
 
 Scale: candidate generation is the only superlinear risk; it is bounded by
 the deterministic bucket cap + AQE skew handling.  The MinHash pre-filter
@@ -91,67 +98,43 @@ def document_clusters(
     text_col: str = "text",
     cfg: DedupConfig | None = None,
 ) -> DataFrame:
-    """Near-dup clustering of a flat document table (word-level 3-gram
-    shingles instead of turn-level): the full exact + MinHash/LSH/verify +
-    winnowing-substring + CC chain, ANSI-safe (usable under a driver-owned
-    session).  Returns (doc_id, cluster_id, canonical_doc_id,
-    cluster_size)."""
-    from sketch_spark.functions import text as T
-
-    cfg = cfg or DedupConfig()
-    ids = F.col(id_col).cast("string")
-    conv = docs.select(
-        ids.alias("conv_id"),
-        F.col(text_col).alias("full_text"),
-        F.xxhash64(F.col(text_col), F.lit(cfg.seed)).alias("full_hash"),
-        F.xxhash64(F.col(text_col), F.lit(cfg.seed + 1)).alias("full_hash2"),
-        F.array_sort(
-            F.array_distinct(T.shingle_hashes_col(F.col(text_col), cfg.shingle_n, cfg.seed))
-        ).alias("shingles"),
-    ).persist()
-    conv.count()
-    sig = minhash.one_perm_signature_from_array(
-        conv.select("conv_id", "shingles"), "shingles", "sig", cfg.p
-    ).select("conv_id", "sig")
-    sig = minhash.densify_signatures(sig, "sig", cfg.p).persist()
-    sig.count()
-    exact = transcripts.exact_dup_pairs(conv)
-    bands = lsh.band_keys(sig, "sig", "conv_id", cfg.rpr, 1 << cfg.p)
-    cands = lsh.candidate_pairs(bands, "conv_id", cfg.bucket_cap)
-    pre = lsh.verify_pairs(cands, sig, "conv_id", "sig", b_bits=64 - cfg.p, tau=cfg.tau_pre)
-    sa = conv.select(F.col("conv_id").alias("a"), F.col("shingles").alias("_sha"))
-    sb = conv.select(F.col("conv_id").alias("b"), F.col("shingles").alias("_shb"))
-    inter = F.size(F.array_intersect("_sha", "_shb")).cast("double")
-    union = F.size(F.array_union("_sha", "_shb")).cast("double")
-    j = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    verified = (
-        pre.join(sa, "a").join(sb, "b").withColumn("j_exact", j)
-        .where(F.col("j_exact") >= cfg.tau)
-        .select("a", "b")
-    )
-    edges = exact.select("a", "b").union(verified)
-    if cfg.enable_substring:
-        substr = suffix.substring_pairs(
-            conv, "full_text", "conv_id", cfg.substring_L, cfg.substring_k
-        )
-        edges = edges.union(substr.select("a", "b"))
-    labels, _ = cc_mod.connected_components(edges)
-    clusters = (
-        conv.select("conv_id")
-        .join(labels.withColumnRenamed("node", "conv_id"), "conv_id", "left")
-        .select(
-            F.col("conv_id").alias(id_col),
-            F.coalesce("cluster_id", F.col("conv_id")).alias("cluster_id"),
-        )
-    )
+    """Near-dup clustering of a flat document table: maps each document to
+    a conv-table row (word-level 3-gram shingles instead of turn-level) and
+    runs DedupPipeline from the sig stage on.  ANSI-safe (usable under a
+    driver-owned session).  Returns (doc_id, cluster_id, canonical_doc_id,
+    cluster_size), doc_id as a string."""
     from pyspark.sql import Window
 
-    wc = Window.partitionBy("cluster_id")
+    from sketch_spark.functions import text as T
+
+    pipe = DedupPipeline(docs.sparkSession, cfg)
+    cfg = pipe.cfg
+    conv_id = F.col(id_col).cast("string")
+    text = F.col(text_col)
+    cid, full_hash, full_hash2 = transcripts.conv_keys(conv_id, text, cfg.seed)
+    shingles = F.array_sort(
+        F.array_distinct(T.shingle_hashes_col(text, cfg.shingle_n, cfg.seed))
+    )
+    conv = pipe.ckpt.run(
+        "conv",
+        lambda: docs.select(
+            conv_id.alias("conv_id"),
+            cid,
+            text.alias("full_text"),
+            full_hash,
+            full_hash2,
+            shingles.alias("shingles"),
+        ),
+    )
+    clusters = pipe.run_from_conv(conv)["clusters"]
     return clusters.select(
-        id_col,
+        F.col("conv_id").alias(id_col),
         "cluster_id",
-        F.col("cluster_id").alias("canonical_doc_id"),
-        F.count(F.lit(1)).over(wc).cast("long").alias("cluster_size"),
+        F.col("canonical_conv_id").alias("canonical_doc_id"),
+        F.count(F.lit(1))
+        .over(Window.partitionBy("cluster_id"))
+        .cast("long")
+        .alias("cluster_size"),
     )
 
 
@@ -304,7 +287,6 @@ class DedupPipeline:
         # invocation-scoped pins: the fingerprint cache and census blocks
         # are released right after the stage result materializes, without
         # touching pins owned by any other pipeline in the session
-        # (round-5 ADVICE: the module-global release_pins() dropped all)
         local_pins: list[DataFrame] = []
 
         def _pin(df: DataFrame) -> DataFrame:
@@ -329,20 +311,23 @@ class DedupPipeline:
         return out
 
     def unpersist_all(self) -> None:
-        """Release every block this pipeline pinned (stage caches, the
-        canonical mapping, and the substr stage's internal fingerprint
-        cache).  Long-lived sessions embedding the pipeline should call
-        this once the run's outputs are consumed."""
+        """Release every block this pipeline pinned (stage caches and the
+        canonical mapping; substr_stage releases its own fingerprint cache).
+        Long-lived sessions embedding the pipeline should call this once
+        the run's outputs are consumed."""
         self.ckpt.unpersist_all()
-        suffix.release_pins()
 
     # -- full run ----------------------------------------------------------
     def run(self, t: DataFrame) -> dict[str, DataFrame]:
         # a re-run on the same pipeline object must not stack a second set
         # of pinned stage blocks on top of the first
         self.ckpt.unpersist_all()
-        conv = self.conv_stage(t)
+        return self.run_from_conv(self.conv_stage(t))
 
+    def run_from_conv(self, conv: DataFrame) -> dict[str, DataFrame]:
+        """Every stage after conv, over a materialized conv table
+        (conv_stage's output, or any table with its conv_id, cid,
+        full_text, full_hash, full_hash2 and shingles columns)."""
         # Overlap independent stage chains (optimization guide §2.6):
         # substr and exact depend ONLY on conv, while sig -> cands ->
         # verify is a chain — running them sequentially left most of the
@@ -361,8 +346,12 @@ class DedupPipeline:
             if self.cfg.enable_substring:
                 fut_substr = pool.submit(self.substr_stage, conv)
             fut_exact = pool.submit(self.exact_stage, conv)
-            if self.cfg.use_minhash_prefilter is None:
-                # policy input depends only on conv — overlap it too
+            if (
+                self.cfg.use_minhash_prefilter is None
+                and not self.ckpt.complete("verify")
+            ):
+                # policy input depends only on conv — overlap it too (only
+                # when verify will rebuild: a resumed verify never reads it)
                 fut_med = pool.submit(self._median_shingles, conv)
             # the counters stage's conv census (row count + cid injectivity)
             # also depends only on conv; precompute it here instead of as a
@@ -427,10 +416,17 @@ class DedupPipeline:
             # one materializing action that also returns the cluster count:
             # the counters stage previously ran a separate
             # distinct().count() job over the just-cached table — same
-            # number, one less blocking driver job (pure latency)
+            # number, one less blocking driver job (pure latency).
+            # count_distinct skips nulls; the null-conv_id conversation's
+            # cluster (cluster_id null) is added back as one more
             crow = canonical.agg(
                 F.count(F.lit(1)).alias("n"),
-                F.count_distinct("cluster_id").alias("k"),
+                (
+                    F.count_distinct("cluster_id")
+                    + F.coalesce(
+                        F.max(F.col("cluster_id").isNull().cast("int")), F.lit(0)
+                    )
+                ).alias("k"),
             ).collect()[0]
             return canonical, iters, int(crow.k)
 

@@ -7,7 +7,10 @@ Re-expresses the reference's signature builders as Spark aggregations:
     groupBy(conv_id, bucket).min(value)  ->  groupBy(conv_id) assemble array.
     Both aggregations are partial+final hash aggs (map-side combine), the
     Spark equivalent of the reference's commutative `operator+=` monoid merge
-    (bbmh.h:1092-1137).  O(1) work per input row, like the C++.
+    (bbmh.h:1092-1137).  O(1) work per input row, like the C++.  This
+    exploded form is the SQL oracle; the dedup pipeline's sig stage uses
+    one_perm_signature_from_array_fast, a map-only numpy kernel over the
+    conv stage's per-conversation shingle arrays (same values, densified).
   * optimal densification (reference bbmh.h:31-56): deterministic fill of
     empty registers by hashed probing of non-empty ones — a vectorized
     pandas UDF over the (one row per conv) signature table, NOT per element.
@@ -92,82 +95,25 @@ def one_perm_signature(
     return sig
 
 
-def one_perm_signature_fast(
-    shingles: DataFrame,
-    group_col: str = "conv_id",
-    hash_col: str = "h",
-    p: int = DEFAULT_P,
-) -> DataFrame:
-    """one_perm_signature + densification fused, without the map pivot.
-
-    The two-level agg variant pays ~120 us/row building the dense array via
-    128 element_at(map) lookups (measured: the pivot alone cost 56 s at
-    466k convs while the actual min-aggregation cost 2.5 s).  Here the
-    sparse (bucket, min) entries go straight into the densify numpy stage,
-    which scatters them into the dense register matrix with one vectorized
-    assignment.  Output: (group, sig array<long> fully densified, or null
-    for empty groups).
-    """
-    m = 1 << p
-    vb = _value_bits(p)
-    mask = (1 << vb) - 1
-    per_bucket = (
-        shingles.select(
-            F.col(group_col).alias("_g"),
-            F.shiftrightunsigned(F.col(hash_col), vb).alias("bucket"),
-            F.col(hash_col).bitwiseAND(F.lit(mask)).alias("value"),
-        )
-        .groupBy("_g", "bucket")
-        .agg(F.min("value").alias("mv"))
-    )
-    entries = (
-        per_bucket.groupBy("_g")
-        .agg(F.collect_list(F.struct("bucket", "mv")).alias("e"))
-        .select(
-            F.col("_g").alias(group_col),
-            F.col("e").getField("bucket").alias("_bks"),
-            F.col("e").getField("mv").alias("_vals"),
-        )
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            bks = pdf["_bks"].tolist()
-            vals = pdf["_vals"].tolist()
-            n = len(bks)
-            lens = np.fromiter((len(b) for b in bks), dtype=np.int64, count=n)
-            rows = np.repeat(np.arange(n), lens)
-            cols = np.concatenate([np.asarray(b, dtype=np.int64) for b in bks]) if n else np.empty(0, np.int64)
-            vv = np.concatenate([np.asarray(v, dtype=np.int64) for v in vals]) if n else np.empty(0, np.int64)
-            mat = np.full((n, m), EMPTY_REG, dtype=np.int64)
-            mat[rows, cols] = vv
-            empty = mat == EMPTY_REG
-            dense = densify_batch(mat, empty, m)
-            all_empty = empty.all(axis=1)
-            lists = dense.tolist()
-            out = [None if all_empty[r] else lists[r] for r in range(n)]
-            yield pd.DataFrame({group_col: pdf[group_col], "sig": out})
-
-    gtype = shingles.schema[group_col].dataType.simpleString()
-    return entries.mapInPandas(gen, schema=f"{group_col} {gtype}, sig array<long>")
-
-
 def one_perm_signature_from_array_fast(
     df: DataFrame,
     arr_col: str = "shingles",
     group_col: str = "cid",
     p: int = DEFAULT_P,
 ) -> DataFrame:
-    """one_perm_signature_fast with ZERO exchanges (r6): when the caller
-    already holds one shingle-hash array per group (the conv stage's
-    single groupBy built it), the explode + two grouping exchanges of the
-    exploded form are recomputing an aggregation the data already has.
-    One map-only numpy pass computes bucket minima (sort + reduceat — a
-    np.minimum.at scatter is ~10x slower) and densifies in the same
-    kernel.  Output rows and values are identical to
-    one_perm_signature_fast over the exploded input (parity-tested):
-    groups with an EMPTY array produce no row, matching explode()
-    semantics."""
+    """Densified one-perm signatures with ZERO exchanges (r6) — the
+    pipeline's sig stage.  When the caller already holds one shingle-hash
+    array per group (the conv stage's single groupBy built it), the
+    explode + two grouping exchanges of one_perm_signature are recomputing
+    an aggregation the data already has.  One map-only numpy pass computes
+    bucket minima (sort + reduceat — a np.minimum.at scatter is ~10x
+    slower) and densifies in the same kernel, scattering the (bucket, min)
+    entries into the dense register matrix with one vectorized assignment
+    (a 128-wide element_at(map) pivot cost 56 s at 466k convs where the
+    min-aggregation itself cost 2.5 s).  Output rows and values are
+    identical to densify_signatures(one_perm_signature(...)) over the
+    exploded input (parity-tested): groups with an EMPTY array produce no
+    row, matching explode() semantics."""
     m = 1 << p
     vb = _value_bits(p)
     mask = np.uint64((1 << vb) - 1)
@@ -212,39 +158,6 @@ def one_perm_signature_from_array_fast(
     return df.select(group_col, arr_col).mapInPandas(
         gen, schema=f"{group_col} {gtype}, sig array<long>"
     )
-
-
-def one_perm_signature_from_array(
-    df: DataFrame,
-    arr_col: str = "shingles",
-    out_col: str = "sig",
-    p: int = DEFAULT_P,
-) -> DataFrame:
-    """Signature computed from a per-row shingle-hash array — ZERO shuffle.
-
-    When the upstream stage already aggregated one array of shingle hashes
-    per conversation (operators/transcripts.py does it in its single
-    groupBy), the one-perm registers are a pure projection: register i =
-    min(h & mask) over hashes with top-p bits == i.  O(m * |arr|) JVM work
-    per row inside codegen; no exchange at all.
-    """
-    m = 1 << p
-    vb = _value_bits(p)
-    mask = (1 << vb) - 1
-    arr = F.col(arr_col)
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda i: F.array_min(
-            F.transform(
-                F.filter(
-                    arr,
-                    lambda h: F.shiftrightunsigned(h, vb) == i.cast("long"),
-                ),
-                lambda h: h.bitwiseAND(F.lit(mask)),
-            )
-        ),
-    )
-    return df.withColumn(out_col, F.when(F.size(arr) > 0, sig))
 
 
 def one_perm_signature_mod(

@@ -1,101 +1,28 @@
-"""Exact set-overlap self-join via prefix filtering (AllPairs / PPJoin).
+"""Exact set-overlap self-joins: (a, b, n_inter, n_a, n_b) for every pair
+(a < b, same block) with n_inter = |A ∩ B| >= t over per-row arrays of
+DISTINCT elements — the scale-safe replacement for the all-pairs-within-
+block self-join (which is quadratic death on a hot block at 100x data):
 
-Guaranteed-superset candidate generation for pairs with |A ∩ B| >= t over
-per-row arrays of DISTINCT elements — the scale-safe replacement for the
-all-pairs-within-block self-join (which is quadratic death on a hot block
-at 100x data):
-
-  * order all elements by (global document frequency, element) ascending.
-    Any fixed total order preserves correctness; rare-first maximizes
-    pruning, because frequent elements (the ones that put every pair into
-    the same bucket) fall OUT of the prefixes.
-  * prefix(A) = the first |A| - t + 1 elements of A in that order.
-    Prefix-filter principle: if |A ∩ B| >= t, the first shared element in
-    the global order lies within BOTH prefixes (each set can skip at most
-    |·| - t elements before it must start hitting shared ones).
-  * candidates = equi-join of prefix rows on (block cols, element) — a
-    shuffle on the element, never on the pair space.
-  * positional upper bound (PPJoin): at the first matched element, sitting
-    at positions (pa, pb) of the frequency-ordered sets, every other shared
-    element lies strictly after it in both sets, so
-    overlap <= 1 + min(|A| - pa, |B| - pb); pairs whose bound < t are
-    pruned without touching the full arrays.
-
-The exact verify (array_intersect over full arrays) is the caller's; this
-module only guarantees candidates ⊇ every qualifying pair.
+  * overlap_count_join: inverted-index pair COUNTING — the equi-join on
+    (block, element) feeds a partial count aggregation, and the count IS
+    the exact overlap.  Cost Σ_e df_e²; pairs exist only where an element
+    is shared.
+  * overlap_join_hybrid: the count join for rare elements plus a
+    hot-projection signature join for elements whose document frequency
+    would make Σ df² quadratic (value-identical; routes to the plain count
+    join when a sampled census finds no hot element).
+  * ngram_overlap_dense: char-n-gram overlap as per-block dense Gram
+    matrix products over a bounded gram vocabulary (value-identical to the
+    count join over char n-gram sets).
 
 Not in the reference (its all-pairs comparison matrices are OpenMP loops
-over <= 10^4 in-memory sketches, util.cpp:157-164, pysketch.h:73-113); from
-the exact set-similarity-join literature: Bayardo/Ma/Srikant WWW'07
-("Scaling Up All Pairs"), Xiao et al. WWW'08 (PPJoin).
+over <= 10^4 in-memory sketches, util.cpp:157-164, pysketch.h:73-113).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def overlap_candidates(
-    sets_df: DataFrame,
-    id_col: str,
-    set_col: str,
-    t: int,
-    block_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """-> (a, b) candidate pairs with a < b, superset of all pairs with
-    |A ∩ B| >= t (within the same block_cols values).
-
-    `set_col` must hold DISTINCT elements per row (array_distinct upstream);
-    duplicate elements would inflate positions and break the bound.
-    Rows with |A| < t are dropped outright (they cannot qualify).
-    """
-    from pyspark.sql import Window
-
-    assert t >= 1
-    bc = list(block_cols)
-    ex = sets_df.select(
-        F.col(id_col).alias("_id"), *bc, F.explode(set_col).alias("_e")
-    )
-    freq = ex.groupBy("_e").agg(F.count(F.lit(1)).alias("_df"))
-    exf = ex.join(freq, "_e")
-    wp = Window.partitionBy("_id").orderBy("_df", "_e")
-    wall = Window.partitionBy("_id")
-    ranked = exf.select(
-        "_id",
-        *bc,
-        "_e",
-        "_df",
-        F.row_number().over(wp).alias("_pos"),
-        F.count(F.lit(1)).over(wall).alias("_sz"),
-    )
-    prefix = ranked.where(F.col("_pos") <= F.col("_sz") - t + 1)
-    a = prefix.alias("pa")
-    b = prefix.alias("pb")
-    join_cond = F.col("pa._e") == F.col("pb._e")
-    for c in bc:
-        join_cond = join_cond & (F.col(f"pa.{c}") == F.col(f"pb.{c}"))
-    join_cond = join_cond & (F.col("pa._id") < F.col("pb._id"))
-    matched = a.join(b, join_cond).select(
-        F.col("pa._id").alias("a"),
-        F.col("pb._id").alias("b"),
-        (
-            F.lit(1)
-            + F.least(
-                F.col("pa._sz") - F.col("pa._pos"), F.col("pb._sz") - F.col("pb._pos")
-            )
-        ).alias("_ub"),
-        F.struct(F.col("pa._df"), F.col("pa._e")).alias("_ord"),
-    )
-    # the bound is valid at the FIRST (min global order) matched element;
-    # for truly-qualifying pairs that element is the first shared element
-    # overall, so ub >= true overlap >= t and the pair survives.
-    return (
-        matched.groupBy("a", "b")
-        .agg(F.min_by("_ub", "_ord").alias("_ub"))
-        .where(F.col("_ub") >= t)
-        .select("a", "b")
-    )
 
 
 def overlap_count_join(
@@ -110,21 +37,15 @@ def overlap_count_join(
     count matched rows per pair — the count IS |A ∩ B| exactly, so no second
     verify pass ever touches the full arrays.
 
-    When to prefer this over `overlap_join` (prefix filter): the prefix
-    filter pays off when t is a large fraction of the set sizes, so prefixes
-    shrink to a few elements.  With a small fixed t over large sets the
-    prefix keeps ~everything (|A| - t + 1 elements), the positional bound
-    1 + min(|A|-pa, |B|-pb) >= t holds for EVERY in-prefix match (pure dead
-    weight), and the window ranks + array-verify join dominate.  Here the
-    element join's output feeds the partial count aggregation inside the
-    same whole-stage-codegen pipeline, so the Σ df² matched rows are never
-    exchanged — the shuffle carries one partial count per (pair, task).
+    The element join's output feeds the partial count aggregation inside
+    the same whole-stage-codegen pipeline, so the Σ df² matched rows are
+    never exchanged — the shuffle carries one partial count per (pair,
+    task).
 
     Scale: cost is Σ_e df_e² like any exact inverted-index join; hot
     elements are split across tasks by AQE skew-join handling, and the plan
     never degenerates to an all-pairs block join (pairs exist only where an
-    element is shared).  For similarity (not overlap) thresholds, where t
-    grows with set size, use `overlap_join`'s prefix pruning instead.
+    element is shared).  overlap_join_hybrid bounds the hot-element terms.
 
     Returns (a, b, n_inter, n_a, n_b) with a < b, n_inter >= t.
     """
@@ -636,37 +557,4 @@ def ngram_overlap_dense(
         e.repartition(4 * dp, "_blk", "_i", "_j")
         .groupBy("_blk", "_i", "_j")
         .applyInPandas(kernel, schema="a long, b long, n_inter long, n_a long, n_b long")
-    )
-
-
-def overlap_join(
-    sets_df: DataFrame,
-    id_col: str,
-    set_col: str,
-    t: int,
-    block_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Exact overlap self-join: (a, b, n_inter, n_a, n_b) for every pair
-    (a < b, same block) with n_inter = |A ∩ B| >= t.  Prefix-filtered
-    candidates, then exact array_intersect verify — full arrays travel only
-    to candidate rows, never to the all-pairs space.  See
-    `overlap_count_join` for the regime where the prefix filter cannot
-    prune (small fixed t over large sets)."""
-    cands = overlap_candidates(sets_df, id_col, set_col, t, block_cols)
-    sa = sets_df.select(
-        F.col(id_col).alias("a"),
-        F.col(set_col).alias("_seta"),
-        F.size(set_col).alias("n_a"),
-    )
-    sb = sets_df.select(
-        F.col(id_col).alias("b"),
-        F.col(set_col).alias("_setb"),
-        F.size(set_col).alias("n_b"),
-    )
-    inter = F.size(F.array_intersect("_seta", "_setb"))
-    return (
-        cands.join(sa, "a")
-        .join(sb, "b")
-        .select("a", "b", inter.alias("n_inter"), "n_a", "n_b")
-        .where(F.col("n_inter") >= t)
     )

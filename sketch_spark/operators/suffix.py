@@ -20,7 +20,7 @@ Spark shape:
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -1050,45 +1050,22 @@ def pretouch_arena(
     return int(df.agg(_F.sum("touched")).collect()[0][0] or 0)
 
 
-# Fallback registry for callers that pass no `pin` hook to
-# substring_pairs, freed by release_pins().  Invocation-scoped callers
-# (DedupPipeline) pass CheckpointManager.pin instead, so concurrent
-# pipelines in one session never release each other's fingerprint cache
-# (round-5 ADVICE: release_pins() used to drop EVERY pin in the process).
-_PINNED: list = []
-
-
-def release_pins() -> None:
-    """Release only the module-fallback pins (invocations that supplied
-    their own `pin` hook are untouched — their owner releases them)."""
-    for df in _PINNED:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped
-    _PINNED.clear()
-
-
 def substring_pairs(
     conv: DataFrame,
     text_col: str = "full_text",
     id_col: str = "conv_id",
     L: int = DEFAULT_L,
     k: int = DEFAULT_K,
-    pin=None,
+    *,
+    pin: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
     # persist the fingerprints: the candidate stage's hot-bucket guard has
     # three consumers (census / cold / hot) and the winnowing kernel is the
     # pipeline's most expensive numpy stage — it must run exactly once.
-    # `pin` (e.g. CheckpointManager.pin) scopes the block to the caller;
-    # without one it lands in the module fallback registry for
-    # release_pins() (callers sharing a session should pass their own pin).
-    fps = winnow_fingerprints(conv, text_col, id_col, L, k)
-    if pin is not None:
-        fps = pin(fps)
-    else:
-        fps = fps.persist()
-        _PINNED.append(fps)
+    # `pin` (a persist hook, e.g. CheckpointManager.pin) scopes the block to
+    # the caller, who releases it; concurrent pipelines in one session
+    # never release each other's fingerprint cache.
+    fps = pin(winnow_fingerprints(conv, text_col, id_col, L, k))
     n_fps = fps.count()  # materializes once; also powers the census skip
     cands = substring_candidate_pairs(fps, id_col, n_fps=n_fps, pin=pin)
     return verify_substring_pairs(cands, conv, text_col, id_col, L)

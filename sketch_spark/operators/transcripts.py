@@ -19,7 +19,7 @@ no Python, no window function, no second scan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 SEP = "\x1e"
@@ -55,22 +55,38 @@ def conv_table(transcripts: DataFrame, n: int = DEFAULT_N, seed: int = DEFAULT_S
     shingles = F.array_sort(
         F.array_distinct(F.transform(shingle_strs, lambda s: F.xxhash64(s, F.lit(seed))))
     )
+    cid, full_hash, full_hash2 = conv_keys(F.col("conv_id"), full_text, seed)
     return agg.select(
         "conv_id",
-        # dictionary-encoded 8-byte working id: every downstream exchange
-        # (64 band rows + ~L/w fingerprint rows per conv, the pipeline's
-        # dominant byte streams) carries this long instead of the string id.
-        # xxhash64 keeps it join-free and deterministic; injectivity is
-        # ASSERTED per run (one agg over the persisted conv table,
-        # dedup.DedupPipeline.run) — at 10^12 convs assign dense ids at
-        # ingest instead and drop the assert.
-        F.xxhash64("conv_id").alias("cid"),
+        cid,
         n_turns.alias("n_turns"),
         full_text.alias("full_text"),
-        F.xxhash64(full_text, F.lit(seed)).alias("full_hash"),
-        F.xxhash64(full_text, F.lit(seed + 1)).alias("full_hash2"),
+        full_hash,
+        full_hash2,
         shingles.alias("shingles"),
         F.size(shingles).alias("n_shingles"),
+    )
+
+
+def conv_keys(
+    conv_id: Column, full_text: Column, seed: int = DEFAULT_SEED
+) -> tuple[Column, Column, Column]:
+    """The conv table's id and exact-duplicate keys: (cid, full_hash,
+    full_hash2).  Shared by conv_table and dedup.document_clusters so
+    every conv table the pipeline consumes derives them the same way.
+
+    cid is a dictionary-encoded 8-byte working id: every downstream
+    exchange (64 band rows + ~L/w fingerprint rows per conv, the
+    pipeline's dominant byte streams) carries this long instead of the
+    string id.  xxhash64 keeps it join-free and deterministic; injectivity
+    is ASSERTED per run (one agg over the persisted conv table,
+    dedup.DedupPipeline.run_from_conv) — at 10^12 convs assign dense ids
+    at ingest instead and drop the assert.  The two full-text hashes key
+    exact_dup_pairs (see there for why two)."""
+    return (
+        F.xxhash64(conv_id).alias("cid"),
+        F.xxhash64(full_text, F.lit(seed)).alias("full_hash"),
+        F.xxhash64(full_text, F.lit(seed + 1)).alias("full_hash2"),
     )
 
 

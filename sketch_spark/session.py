@@ -1,7 +1,8 @@
 """SparkSession factory with scale-oriented defaults.
 
-Tuned for the sandbox (local[N], 128 GiB, single JVM) but every knob is the
-one you would also set on a 1000-executor cluster:
+Sized from the host for local[N] (cores from the CPU affinity mask, driver
+heap from MemTotal; SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM override), and every
+knob is the one you would also set on a 1000-executor cluster:
 
   * AQE on (runtime coalescing, skew-join splitting) — the LSH bucket join is
     the skew hotspot at 10^12 turns.
@@ -44,15 +45,38 @@ def _local_dir(master: str) -> str | None:
     return None
 
 
-def _mem_available_gb() -> int | None:
+def _meminfo_gb(key: str) -> int | None:
+    """A /proc/meminfo field in whole GiB (None where there is none)."""
     try:
         with open("/proc/meminfo") as f:
             for line in f:
-                if line.startswith("MemAvailable:"):
+                if line.startswith(f"{key}:"):
                     return int(line.split()[1]) // (1024 * 1024)
     except OSError:
         pass
     return None
+
+
+def _host_cpus() -> int:
+    """Cores this process may run on (what `nproc` reports)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:
+        return os.cpu_count() or 1
+
+
+def _driver_mem() -> str:
+    """SPARK_DRIVER_MEM, else min(16g, 60% of MemTotal): the single local
+    JVM holds driver and executors, so a fixed 16g default outgrew small
+    hosts (a 15 GiB box was OOM-killed at 15.9 GB RSS) while the rest of
+    the host still needs room for the Python workers."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    total = _meminfo_gb("MemTotal")
+    if total is None:
+        return "16g"
+    return f"{max(1, min(16, int(total * 0.6)))}g"
 
 
 def _driver_java_opts(driver_mem: str) -> str | None:
@@ -71,13 +95,17 @@ def _driver_java_opts(driver_mem: str) -> str | None:
     if force == "0":
         return None
     if force != "1":
+        # a default heap cut below 16g by _driver_mem nearly fills its
+        # host: never commit it up front
+        if not os.environ.get("SPARK_DRIVER_MEM") and driver_mem != "16g":
+            return None
         try:
             need_gb = int("".join(c for c in driver_mem if c.isdigit()))
             if not driver_mem.lower().endswith("g"):
                 need_gb = -(-need_gb // 1024)  # treat as MiB
         except ValueError:
             return None
-        avail = _mem_available_gb()
+        avail = _meminfo_gb("MemAvailable")
         if avail is None or avail < need_gb + 4:
             return None
     return f"-Xms{driver_mem} -XX:+AlwaysPreTouch"
@@ -89,15 +117,16 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_host_cpus())
     # master="inherit" leaves the master to the launcher (spark-submit
     # --master ...); anything else (or None) is set explicitly.
     master = master or f"local[{cpus}]"
     # shuffle partitions default: 2x cores locally; a real cluster would use
     # ~2-3x total executor cores (AQE coalesces down afterwards).
     if shuffle_partitions is None:
-        n = int(cpus) if str(cpus).isdigit() else 32
+        n = int(cpus) if cpus.isdigit() else _host_cpus()
         shuffle_partitions = max(2 * n, 8)
+    driver_mem = _driver_mem()
 
     b = SparkSession.builder.appName(app_name)
     if master != "inherit":
@@ -110,12 +139,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.ansi.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
-    jopts = _driver_java_opts(os.environ.get("SPARK_DRIVER_MEM", "16g"))
+    jopts = _driver_java_opts(driver_mem)
     if jopts:
         b = b.config("spark.driver.extraJavaOptions", jopts)
     ld = _local_dir(master)

@@ -40,6 +40,8 @@ class CheckpointManager:
         return os.path.join(d, "data.parquet"), os.path.join(d, "manifest.json")
 
     def complete(self, stage: str) -> bool:
+        if not self.enabled:
+            return False
         data, manifest = self._paths(stage)
         if not os.path.exists(manifest):
             return False

@@ -10,7 +10,8 @@ from sketch_spark import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("sketch-spark-tests", master="local[8]", shuffle_partitions=8)
+    # master defaults to local[$SPARK_GRAFT_CPUS], else local[nproc]
+    s = get_spark("sketch-spark-tests", shuffle_partitions=8)
     yield s
     s.stop()
 

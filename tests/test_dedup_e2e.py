@@ -71,6 +71,28 @@ def test_counters_populated(result):
     assert c["cc_iterations"] >= 1
 
 
+def test_clusters_counter_counts_null_conv_id(spark):
+    """A conversation with a null conv_id is its own cluster, labelled
+    with a null cluster_id; the clusters counter must count it too
+    (count_distinct alone skips nulls)."""
+    from datetime import datetime
+
+    rows = [
+        (c, i, "user", f"conversation {c} turn {i}", None, datetime(2024, 1, 1))
+        for c in ("a", "b", None)
+        for i in range(3)
+    ]
+    t = spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string, tool string, "
+        "ts timestamp",
+    )
+    pipe = DedupPipeline(spark, DedupConfig())
+    assert pipe.run(t)["clusters"].count() == 3
+    assert pipe.counters["clusters"] == 3
+    pipe.unpersist_all()
+
+
 def test_per_turn_text_equality(result, spark):
     """North-rule invariant: pipeline outputs re-joined to the untouched
     input on (conv_id, turn_idx) leave text bytes identical (the pipeline

@@ -22,9 +22,28 @@ def duck():
 
 
 def test_entry_smoke(spark):
-    df = E.entry(spark)
-    assert df.count() > 0
-    assert set(df.columns) >= {"doc_id", "cluster_id"}
+    """entry() runs DedupPipeline over the sf0.001 documents; its
+    doc->cluster partition shape is pinned (500 docs, 476 clusters, 21 of
+    them with more than one doc), with ANSI off and on (a driver-owned
+    Spark 4 session defaults ANSI on)."""
+    from collections import Counter
+
+    for ansi in ("false", "true"):
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        try:
+            df = E.entry(spark)
+            rows = df.collect()
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", "false")
+        assert df.columns == [
+            "doc_id", "cluster_id", "canonical_doc_id", "cluster_size"
+        ]
+        sizes = Counter(r.cluster_id for r in rows)
+        assert len(rows) == 500, ansi
+        assert len(sizes) == 476, ansi
+        assert sum(1 for n in sizes.values() if n > 1) == 21, ansi
+        assert all(r.cluster_size == sizes[r.cluster_id] for r in rows)
+        assert all(r.canonical_doc_id == r.cluster_id for r in rows)
 
 
 def test_poly_docs_matches_column_folds(spark):

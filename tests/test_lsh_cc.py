@@ -153,8 +153,10 @@ def test_cc_window_rounds_match_groupby_join_form(spark):
     df = spark.createDataFrame(edges, "u long, v long")
     cur_new, cur_ref = df, df
     for _round in range(4):
-        cur_new = _small_star(_large_star(cur_new))
-        cur_ref = small_ref(large_ref(cur_ref))
+        # lineage cut per round, as connected_components does: without it
+        # the analyzed plans grow with every round until the driver OOMs
+        cur_new = _small_star(_large_star(cur_new)).localCheckpoint()
+        cur_ref = small_ref(large_ref(cur_ref)).localCheckpoint()
         got = sorted((r.u, r.v) for r in cur_new.collect())
         want = sorted((r.u, r.v) for r in cur_ref.collect())
         assert got == want, f"round {_round}: {got} != {want}"
@@ -236,7 +238,9 @@ def test_verify_pairs_shared_empty_registers_are_not_matches(spark):
     df = spark.createDataFrame(
         [("a", hs(1, 2)), ("b", hs(10_001, 2))], "id string, xs array<long>"
     )
-    sig = MH.one_perm_signature_from_array(df, "xs", "sig", p).select("id", "sig")
+    sig = MH.one_perm_signature(
+        df.select("id", F.explode("xs").alias("h")), "id", "h", p
+    ).select("id", "sig")
     pairs = spark.createDataFrame(
         [("a", "b", 1), ("a", "a", 1)], "a string, b string, n_bands int"
     )

@@ -41,19 +41,6 @@ def test_one_perm_signature_and_jaccard(spark):
     assert (sa == sa).all()
 
 
-def test_one_perm_from_array_equals_exploded(spark):
-    a, b, _ = _planted_sets(n=500, olap=100)
-    df = _shingle_df(spark, {"A": a, "B": b})
-    s1 = MH.one_perm_signature(df, p=5)
-    arr = df.groupBy("conv_id").agg(
-        F.array_sort(F.collect_set("h")).alias("shingles")
-    )
-    s2 = MH.one_perm_signature_from_array(arr, "shingles", "sig", p=5)
-    r1 = {r.conv_id: r.sig for r in s1.collect()}
-    r2 = {r.conv_id: r.sig for r in s2.collect()}
-    assert r1 == r2
-
-
 def test_merge_equivalence(spark):
     """finalize(A) += finalize(B) == finalize(A ∪ B) — the commutative monoid
     property (reference mhtest.cpp:131-149, bbmh.h:1092-1137).  In Spark:
@@ -144,33 +131,26 @@ def test_counting_bottom_k_weighted_jaccard(spark):
     assert abs(jvm - exp) < 1e-12
 
 
-def test_one_perm_fast_equals_two_stage(spark):
-    a, b, _ = _planted_sets(n=400, olap=150)
-    rng = np.random.default_rng(6)
-    sparse = rng.integers(0, 2**63, size=5).astype(np.int64)
-    df = _shingle_df(spark, {"A": a, "B": b, "S": sparse})
-    slow = MH.densify_signatures(MH.one_perm_signature(df, p=6).select("conv_id", "sig"), "sig", p=6)
-    fast = MH.one_perm_signature_fast(df, p=6)
-    r1 = {r.conv_id: r.sig for r in slow.collect()}
-    r2 = {r.conv_id: r.sig for r in fast.collect()}
-    assert r1 == r2
-
-
 def test_one_perm_from_array_fast_equals_exploded(spark):
     """The r6 map-only array kernel must be row- and value-identical to
-    one_perm_signature_fast over the exploded form, including negative
-    hashes (uint64 bucket shift) and empty arrays (no output row, like
-    explode)."""
+    the exploded SQL oracle densify_signatures(one_perm_signature(...)),
+    including negative hashes (uint64 bucket shift), sparse sets (mostly
+    densified registers), planted-overlap sets and empty arrays (no
+    output row, like explode)."""
     rng = np.random.default_rng(9)
+    a, b, _ = _planted_sets(n=400, olap=150)
     rows = [
         ("A", sorted({int(v) for v in rng.integers(-(2**63), 2**63, 500, dtype=np.int64)})),
         ("B", sorted({int(v) for v in rng.integers(-(2**63), 2**63, 3, dtype=np.int64)})),
         ("C", []),
         ("D", [7]),
+        ("P", sorted({int(v) for v in a})),
+        ("Q", sorted({int(v) for v in b})),
     ]
     df = spark.createDataFrame(rows, "cid string, shingles array<long>")
     ex = df.select("cid", F.explode("shingles").alias("h"))
-    want = {r.cid: r.sig for r in MH.one_perm_signature_fast(ex, "cid", "h", p=6).collect()}
+    oracle = MH.one_perm_signature(ex, "cid", "h", p=6).select("cid", "sig")
+    want = {r.cid: r.sig for r in MH.densify_signatures(oracle, "sig", p=6).collect()}
     got = {
         r.cid: r.sig
         for r in MH.one_perm_signature_from_array_fast(df, "shingles", "cid", p=6).collect()
@@ -231,7 +211,13 @@ def test_one_perm_cardinality_empty_registers_count_as_default_val(spark):
         ("big", hs(1, 5000)),
     ]
     df = spark.createDataFrame(rows, "g string, xs array<long>")
-    sig = MH.one_perm_signature_from_array(df, "xs", "sig", p)
+    # exploded builder keeps empty registers null; an empty set has no
+    # element rows, so its all-null signature is added directly
+    sig = MH.one_perm_signature(
+        df.select("g", F.explode("xs").alias("h")), "g", "h", p
+    ).select("g", "sig").unionByName(
+        spark.createDataFrame([("empty", [None] * (1 << p))], "g string, sig array<long>")
+    )
     est = {
         r.g: r.est
         for r in sig.select(

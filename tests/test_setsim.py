@@ -1,12 +1,13 @@
-"""setsim: the two exact overlap-join strategies must agree with each other
-and with a brute-force all-pairs intersect on a planted corpus."""
+"""setsim: the exact overlap joins (count join, hybrid, dense n-gram) must
+agree with each other and with a brute-force all-pairs intersect on
+planted corpora."""
 
 import itertools
 
 import pytest
 from pyspark.sql import functions as F  # noqa: F401
 
-from sketch_spark.operators.setsim import overlap_count_join, overlap_join
+from sketch_spark.operators.setsim import overlap_count_join
 
 ROWS = [
     # (id, block, elements) — crafted so blocks, sizes, and overlaps vary:
@@ -43,20 +44,6 @@ def test_count_join_matches_brute_force(spark, t):
         for r in overlap_count_join(df, "id", "es", t, ("blk",)).collect()
     }
     assert got == _brute(t)
-
-
-@pytest.mark.parametrize("t", [2, 4])
-def test_prefix_join_matches_count_join(spark, t):
-    df = spark.createDataFrame(ROWS, "id long, blk string, es array<long>")
-    a = {
-        (r.a, r.b): (r.n_inter, r.n_a, r.n_b)
-        for r in overlap_join(df, "id", "es", t, ("blk",)).collect()
-    }
-    b = {
-        (r.a, r.b): (r.n_inter, r.n_a, r.n_b)
-        for r in overlap_count_join(df, "id", "es", t, ("blk",)).collect()
-    }
-    assert a == b == _brute(t)
 
 
 def test_no_block_cols(spark):

@@ -6,6 +6,11 @@ import pytest
 from sketch_spark.operators import suffix
 
 
+def _pin(df):
+    # substring_pairs' persist hook for its fingerprint cache
+    return df.persist()
+
+
 def test_rolling_hash_matches_naive():
     s = "abcdefghabcdefgh" * 4
     k = 5
@@ -137,7 +142,7 @@ def test_substring_pairs_detects_long_span(spark):
         ("q2", noise(120)),
     ]
     conv = spark.createDataFrame(rows, "conv_id string, full_text string")
-    pairs = suffix.substring_pairs(conv, L=200, k=50)
+    pairs = suffix.substring_pairs(conv, L=200, k=50, pin=_pin)
     got = {(r.a, r.b) for r in pairs.collect()}
     assert ("p1", "p2") in got or ("p2", "p1") in got
     assert not any({a, b} <= {"q1", "q2"} for a, b in got)
@@ -159,7 +164,7 @@ def test_substring_pairs_non_ascii_alignment(spark):
         ("u3", noise(120, "ε")),
     ]
     conv = spark.createDataFrame(rows, "conv_id string, full_text string")
-    pairs = suffix.substring_pairs(conv, L=200, k=50)
+    pairs = suffix.substring_pairs(conv, L=200, k=50, pin=_pin)
     got = {(r.a, r.b) for r in pairs.collect()}
     assert ("u1", "u2") in got
     assert not any("u3" in p for p in got)
@@ -173,7 +178,7 @@ def test_substring_pairs_span_threshold(spark):
         ("b", "C" * 300 + span + "D" * 300),
     ]
     conv = spark.createDataFrame(rows, "conv_id string, full_text string")
-    pairs = suffix.substring_pairs(conv, L=200, k=50)
+    pairs = suffix.substring_pairs(conv, L=200, k=50, pin=_pin)
     assert pairs.count() == 0
 
 
