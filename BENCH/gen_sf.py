@@ -38,6 +38,16 @@ PRIO = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 ETYPES = ["click", "error", "purchase", "signup", "view"]
 RFLAG = ["A", "N", "R"]
 LSTAT = ["F", "O"]
+READ_ONLY_TESTDATA = "/root/testdata"
+
+
+def writes_into_testdata(outdir: str) -> bool:
+    """True when `outdir` is the read-only testdata root or lies under it
+    (path components, not string prefixes: a sibling such as
+    `<root>_local` is allowed, the root itself with or without a trailing
+    slash is not)."""
+    root = os.path.abspath(READ_ONLY_TESTDATA)
+    return os.path.commonpath([root, os.path.abspath(outdir)]) == root
 
 
 def write(outdir: str, name: str, table: pa.Table) -> None:
@@ -52,9 +62,8 @@ def main() -> None:
         if len(sys.argv) > 2
         else f"/root/testdata_local/sf{sys.argv[1]}"
     )
-    assert not os.path.abspath(outdir).startswith(
-        "/root/testdata/"
-    ), "refusing to write into the driver's read-only testdata"
+    if writes_into_testdata(outdir):
+        sys.exit(f"refusing to write into the read-only testdata: {outdir}")
     os.makedirs(outdir, exist_ok=True)
     rng = np.random.default_rng(42)
     k = sf / 0.1  # multiplier vs the measured sf0.1 row counts

@@ -11,15 +11,15 @@ partitioning):
     (band boundaries match the reference layout — contiguous rpr-register
     slices, ssi.h:360-384; the exact key hash is internal, only collisions
     matter).
-  * ONE shuffle builds all buckets: groupBy(band, key) with collect_list.
-    Buckets are capped at `bucket_cap` ids (deterministic: sorted by conv_id,
-    reference-style maxcand early stop, ssi.h:387-444); dropped ids are
-    counted, not silently lost.  A capped bucket of a boilerplate template
-    cannot explode into cap^2 >> 10^6 pairs — this plus AQE skew-join is the
-    hot-bucket strategy (SURVEY.md §4).
-  * pairs are emitted inside the same aggregation via a nested transform
-    (no self-join, no second scan), then deduped by groupBy(a, b) which also
-    yields the match count n_bands (the reference's per-id hit count).
+  * ONE shuffle builds all buckets: groupBy(band, key) with collect_list
+    (routing.capped_bucket_pairs).  Buckets are capped at `bucket_cap`
+    members (deterministic rank order, reference-style maxcand early stop,
+    ssi.h:387-444); members beyond the cap link to the bucket root instead
+    of being dropped, so a boilerplate template cannot explode into
+    cap^2 >> 10^6 pairs and still stays one component.
+  * pairs are emitted from the collected bucket by explode (no self-join,
+    no second scan), then deduped by groupBy(a, b) which also yields the
+    match count n_bands (the reference's per-id hit count).
 """
 
 from __future__ import annotations
@@ -27,7 +27,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .routing import capped_bucket_pairs
+
 DEFAULT_RPR = 4  # registers per band  (ssi.h pow2 ladder member)
+# Bands whose over-cap buckets emit root links: one link per member per
+# band would be 64x redundant; 8 band-diversified roots give each member
+# that many independent verified chances to join its component.
+LINK_BANDS = 8
 
 
 def band_keys(
@@ -59,188 +65,37 @@ def candidate_pairs(
     bands_df: DataFrame,
     id_col: str = "conv_id",
     bucket_cap: int = 64,
-    link_bands: int = 8,
     hot_threshold: int = 1_000_000,
     n_ids: int | None = None,
     pin=None,
 ) -> DataFrame:
     """(id, band, key) -> distinct candidate pairs (a, b, n_bands) with a < b.
 
-    Hot-bucket strategy (boilerplate templates put 10^4+ near-identical
-    convs in the same bucket; emitting C(n,2) pairs is quadratic death,
-    but *dropping* over-cap members fragments the cluster — measured
-    recall 0.04 at 10^7 turns with plain truncation):
+    Each (band, key) bucket emits its pairs through
+    routing.capped_bucket_pairs: members ranked by xxhash64(id, band), the
+    first `bucket_cap` as a clique, every member beyond the cap linked to
+    the bucket's rank-1 root (band-diversified, so each member draws an
+    independent root per band).  Root links come from the first
+    LINK_BANDS bands only.  n_bands counts the buckets a pair shares (the
+    reference's per-id hit count).
 
-      * members are ranked inside each bucket by xxhash64(id, band) —
-        band-diversified, so each member draws an independent rank per
-        band (the reference's maxcand early stop, ssi.h:387-444, with a
-        deterministic instead of insertion order);
-      * the first `bucket_cap` members pair all-to-all (clique);
-      * every member beyond the cap emits ONE pair to the bucket's rank-1
-        root.  Verification decides if the link is real; a true template
-        family passes and stays one connected component via the root,
-        at O(cap^2 + n) pairs per bucket instead of O(n^2).
-
-    Plan: ONE exchange on (band, key) feeding ONE hash aggregation — each
-    bucket is collected whole (bounded rows: even the 36k-member
-    boilerplate bucket is ~600 KB) and the band-diversified ranking happens
-    INSIDE the collected array, so nothing ever sorts the 30M-row band
-    table globally.  Measured against the window-function formulation at
-    scale 1200: 29.9 s vs 40.6 s with bit-identical output (2,010,171
-    pairs, exceptAll = 0 both ways); the earlier census-groupBy + join
-    formulation cost 93 s.
-
-    TWIN-MAINTENANCE NOTE: suffix.substring_candidate_pairs carries a
-    parallel census/cold/hot implementation over (fp) fingerprint groups
-    with deliberate domain differences (raw-value keys, tail subsampling,
-    an a != b guard).  A fix to the census threshold math, the hot-bucket
-    cap handling, or the root-link strategy here almost certainly applies
-    there too — check both.
-
-    Hot-bucket row-size guard (`hot_threshold`): collect_list makes each
-    bucket ONE row — O(members) bytes in one task, fine at the measured
-    36k-member worst case (~600 KB) but a multi-GB row for a 10^8-member
-    bucket at 10^12-turn scale.  A deterministic content-hash sampled
-    census (routing.hot_keys: ~400 expected samples per at-threshold
-    bucket; one cheap re-scan, no second full exchange) finds buckets over
-    the threshold; those are routed — anti/semi joins on the census
-    DataFrame, broadcast while small, shuffle join past 4M hot keys —
-    through a window-rank formulation over the SAME (r, id) ordering:
-    row_number over a spillable external sort, so task memory stays
-    bounded by the sort buffer no matter the bucket size — and emit
-    identical pairs (clique over the first cap ranks, rank-1 root links
-    beyond, asserted bit-identical in tests/test_lsh_cc.py).  Buckets at
-    or under the threshold never leave the fast path, and when nothing
-    exceeds it the original single-consumer plan is returned untouched.
-
-    `pin`: optional persist hook (CheckpointManager.pin) forwarded to the
-    census so its aggregation is evaluated once across the routing joins.
+    `hot_threshold` bounds the members a bucket may collect into one row;
+    larger buckets take the window-rank path with identical output.  Each
+    id contributes one row per band, so no bucket can hold more than
+    `n_ids` members: a known id count under the threshold skips the hot
+    census.  `pin` (CheckpointManager.pin) is forwarded to the census.
     """
-    from pyspark.sql import Window
-
-    from .routing import hot_keys, route_split
-    assert hot_threshold >= bucket_cap
-    # DETERMINISTIC sampled census (routing.py, VERDICT r4 #1): routing
-    # only needs to CATCH huge buckets — both routes emit bit-identical
-    # pairs (tested) — and the content-hash sample misses a
-    # >= hot_threshold bucket with probability ~e^-200.  The hot set stays
-    # a DataFrame (broadcast anti/semi joins, shuffle fallback past 4M hot
-    # keys): no driver key list, no 100k abort — a boilerplate-heavy
-    # 10^12-turn corpus degrades to a shuffle join instead of dying.  When
-    # the census is EMPTY — every run at every measured scale — the
-    # function returns the original single-consumer plan with zero routing
-    # overhead.
-    # Provable census skip (VERDICT r3 next-round #1c): each id contributes
-    # exactly one row per band, so a (band, key) bucket can never hold more
-    # members than there are ids.  When the caller knows the id count (the
-    # dedup pipeline reads it off the sig stage's row count — free metadata)
-    # and it is below the threshold, the census cannot find anything: skip
-    # its extra pass over the band table entirely.  It cost the round-3
-    # bench ~6 s at sf0.1 for a provably-empty answer.
-    hot, n_hot = hot_keys(
+    pairs = capped_bucket_pairs(
         bands_df,
         ["band", "key"],
+        id_col,
+        bucket_cap,
         hot_threshold,
         n_rows=n_ids,
-        sample_cols=["band", "key", id_col],
         pin=pin,
+        keep_tail=lambda ti, mid: F.col("band") < LINK_BANDS,
     )
-    if hot is None:
-        cold_bands = bands_df
-    else:
-        cold_bands, hot_bands = route_split(bands_df, hot, ["band", "key"], n_hot)
-
-    # rank members by xxhash64(id, band) (independent order per band — the
-    # reference's maxcand early stop, ssi.h:387-444, made deterministic).
-    # The (rank, id) struct is built INSIDE the aggregation expression —
-    # per input row, whole-stage codegen — and array_sort on the struct
-    # array is a native sort.  The earlier form built the structs with an
-    # interpreted transform() over the collected array, which made the
-    # few 10^5-member hot buckets (boilerplate templates) single-task
-    # stragglers: 3 interpreted passes x bucket size each.
-    buckets = (
-        cold_bands.groupBy("band", "key")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.xxhash64(F.col(id_col), F.col("band")).alias("r"),
-                        F.col(id_col).alias("i"),
-                    )
-                )
-            ).alias("rids")
-        )
-        .where(F.size("rids") >= 2)
-    )
-    b2 = buckets.select("band", "key", "rids")
-    heads = F.slice("rids", 1, bucket_cap)
-    # clique expansion via two Generate operators (codegen); ids are
-    # extracted AFTER the explode, so no per-array lambda ever runs
-    head_pairs = (
-        b2.select(F.explode(heads).alias("sa"), heads.alias("hh"))
-        .select(F.col("sa.i").alias("a"), F.explode("hh").alias("sb"))
-        .select("a", F.col("sb.i").alias("b"))
-        .where(F.col("a") < F.col("b"))
-    )
-    # one root-link per over-cap member per band would be 64x redundant;
-    # `link_bands` bands (with band-diversified roots) give each member
-    # that many independent verified chances to join the component.
-    tails = (
-        b2.where((F.size("rids") > bucket_cap) & (F.col("band") < link_bands))
-        .select(
-            F.get("rids", 0).getField("i").alias("_root"),
-            F.explode(F.slice("rids", bucket_cap + 1, 1 << 30)).alias("_ms"),
-        )
-        .select(
-            F.least(F.col("_ms.i"), F.col("_root")).alias("a"),
-            F.greatest(F.col("_ms.i"), F.col("_root")).alias("b"),
-        )
-    )
-    def pairs_from(p: DataFrame) -> DataFrame:
-        return p.groupBy("a", "b").agg(F.count(F.lit(1)).alias("n_bands"))
-
-    if hot is None:
-        return pairs_from(head_pairs.unionByName(tails))
-
-    # hot path: identical (r, id) ordering realized as row_number + running
-    # first (= rank-1 root) over ONE ordered window — one spillable sort,
-    # no O(members) row, no join.  The heads re-collect into a cap-bounded
-    # array on the SAME (band, key) partitioning (no re-exchange) for the
-    # clique expansion.
-    wspec = Window.partitionBy("band", "key").orderBy("_r", "_i")
-    ranked = (
-        hot_bands.select(
-            "band",
-            "key",
-            F.col(id_col).alias("_i"),
-            F.xxhash64(F.col(id_col), F.col("band")).alias("_r"),
-        )
-        .withColumn("_rk", F.row_number().over(wspec))
-        .withColumn("_root", F.first("_i").over(wspec))
-    )
-    hot_heads = (
-        ranked.where(F.col("_rk") <= bucket_cap)
-        .groupBy("band", "key")
-        .agg(F.array_sort(F.collect_list(F.struct("_rk", "_i"))).alias("hh"))
-    )
-    hot_head_pairs = (
-        hot_heads.select(F.explode("hh").alias("sa"), F.col("hh"))
-        .select(F.col("sa._i").alias("a"), F.explode("hh").alias("sb"))
-        .select("a", F.col("sb._i").alias("b"))
-        .where(F.col("a") < F.col("b"))
-    )
-    hot_tails = ranked.where(
-        (F.col("_rk") > bucket_cap) & (F.col("band") < link_bands)
-    ).select(
-        F.least(F.col("_i"), F.col("_root")).alias("a"),
-        F.greatest(F.col("_i"), F.col("_root")).alias("b"),
-    )
-
-    return pairs_from(
-        head_pairs.unionByName(tails)
-        .unionByName(hot_head_pairs)
-        .unionByName(hot_tails)
-    )
+    return pairs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("n_bands"))
 
 
 def band_keys_multilevel(
@@ -344,23 +199,6 @@ def candidate_pairs_capped(
         )
         .drop("_ra", "_rb")
     )
-
-
-def bucket_census(bands_df: DataFrame, id_col: str = "conv_id", bucket_cap: int = 64) -> dict:
-    """Counters for the lineage/metrics contract: bucket-size histogram,
-    #buckets over cap, #ids beyond the cap (root-linked, not dropped)."""
-    sizes = bands_df.groupBy("band", "key").agg(
-        F.count_distinct(F.col(id_col)).alias("sz")
-    )
-    row = sizes.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum(F.when(F.col("sz") > bucket_cap, 1).otherwise(0)).alias("buckets_over_cap"),
-        F.sum(
-            F.when(F.col("sz") > bucket_cap, F.col("sz") - bucket_cap).otherwise(0)
-        ).alias("ids_root_linked"),
-        F.max("sz").alias("max_bucket"),
-    ).collect()[0]
-    return {k: (0 if row[k] is None else int(row[k])) for k in row.asDict()}
 
 
 def verify_pairs(

@@ -259,8 +259,11 @@ DENSE_MAX_VOCAB = 16384
 # the cluster size (guide §2 — never a constant tuned to local[32]).
 DENSE_BLOCK_ROWS = 512
 # Replication factor cap: each row is shipped to B block-pair keys, so B
-# is bounded; beyond it blocks grow past DENSE_BLOCK_ROWS instead (the
-# kernel chunks the matmul internally, memory stays bounded).
+# is bounded; beyond it blocks grow past DENSE_BLOCK_ROWS instead.  The
+# matmul is NOT chunked: _count_matrix_codes allocates the whole float32
+# S = A_l @ A_r.T for a block pair, so one kernel call holds
+# ~(largest_group_rows / 64)²·4 bytes — memory grows quadratically with
+# the largest group once B is capped.
 DENSE_MAX_BLOCKS = 64
 
 

@@ -56,8 +56,6 @@ def test_bucket_cap_clique_plus_root_links(spark):
     for r in pairs:
         parent[find(r.a)] = find(r.b)
     assert len({find(i) for i in ids}) == 1
-    census = lsh.bucket_census(bands, bucket_cap=4)
-    assert census["buckets_over_cap"] == 1 and census["ids_root_linked"] == 6
     # determinism: same input -> same pairs
     again = lsh.candidate_pairs(bands, bucket_cap=4).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, pairs))
@@ -175,19 +173,28 @@ def test_hot_bucket_routing_bit_identical(spark):
     rng = random.Random(9)
     rows = []
     # bucket A: 500 members (hot at threshold 100), bucket B: 40 members,
-    # some members in both buckets on different bands
-    ids = [f"c{i:05d}" for i in range(520)]
+    # some members in both buckets on different bands; bucket C: 200
+    # members of their own at band 9 (hot too), past lsh.LINK_BANDS, so
+    # both routes must cut its tail
+    ids = [f"c{i:05d}" for i in range(720)]
     for i in range(500):
         rows.append((ids[i], 0, 111))
     for i in range(480, 520):
         rows.append((ids[i], 1, 222))
+    for i in range(520, 720):
+        rows.append((ids[i], 9, 333))
+    tail_cut = set(ids[520:720])
     rng.shuffle(rows)
     bands = spark.createDataFrame(rows, "conv_id string, band int, key long")
-    cold = candidate_pairs(bands, bucket_cap=16, link_bands=8, hot_threshold=10**6)
-    routed = candidate_pairs(bands, bucket_cap=16, link_bands=8, hot_threshold=100)
+    cold = candidate_pairs(bands, bucket_cap=16, hot_threshold=10**6)
+    routed = candidate_pairs(bands, bucket_cap=16, hot_threshold=100)
     c = {(r.a, r.b, r.n_bands) for r in cold.collect()}
     h = {(r.a, r.b, r.n_bands) for r in routed.collect()}
     assert c == h and len(c) > 0
+    # bucket C: its C(16,2) clique only, no root links
+    in_c = [p for p in c if p[0] in tail_cut or p[1] in tail_cut]
+    assert len(in_c) == 16 * 15 // 2
+    assert all(a in tail_cut and b in tail_cut for a, b, _ in in_c)
 
 
 def test_hot_bucket_ten_million_members_bounded(spark):
@@ -205,7 +212,7 @@ def test_hot_bucket_ten_million_members_bounded(spark):
         F.lit(42).cast("long").alias("key"),
     )
     cap = 64
-    pairs = candidate_pairs(bands, bucket_cap=cap, link_bands=8, hot_threshold=500_000)
+    pairs = candidate_pairs(bands, bucket_cap=cap, hot_threshold=500_000)
     got = pairs.agg(
         F.count(F.lit(1)).alias("n"), F.count_distinct("a", "b").alias("d")
     ).collect()[0]

@@ -78,8 +78,8 @@ def test_candidate_pairs_over_100k_hot_buckets_completes(spark):
         )
         .select("conv_id", "band", "key")
     )
-    routed = candidate_pairs(bands, bucket_cap=2, link_bands=8, hot_threshold=2)
-    cold = candidate_pairs(bands, bucket_cap=2, link_bands=8, hot_threshold=10**9)
+    routed = candidate_pairs(bands, bucket_cap=2, hot_threshold=2)
+    cold = candidate_pairs(bands, bucket_cap=2, hot_threshold=10**9)
     r = routed.persist()
     c = cold.persist()
     try:
