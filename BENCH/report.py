@@ -5,7 +5,9 @@ Single source of truth: every throughput/efficiency figure quoted in
 BENCH/BASELINE.md must appear in (or be computed here from) the jsonl.
 Prints a markdown fragment with medians + ranges per (series, cpus, scale)
 group, strong-scaling efficiencies from those medians, and the weak-scaling
-pairs.  Run after the run_scaling*.sh campaign scripts.
+pairs.  The jsonl is the archived record of the local[32] scaling
+campaign; the scripts that produced it were retired in favour of
+perfbench/.
 
 Series: the jsonl is append-only across rounds; round-4 re-measured the key
 (cpus, scale) points under the rewritten winnowing/verify kernels and the

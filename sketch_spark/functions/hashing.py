@@ -259,21 +259,6 @@ def poly_hash_token_sql(expr: str) -> str:
     )
 
 
-def poly_combine_col(hashes: list[Column]) -> Column:
-    """Combine token hashes into a shingle hash: fold with base POLY_TOKEN_B."""
-    acc = hashes[0]
-    for h in hashes[1:]:
-        acc = (acc * F.lit(POLY_TOKEN_B) + h) % F.lit(POLY_P)
-    return acc
-
-
-def poly_combine_sql(exprs: list[str]) -> str:
-    acc = exprs[0]
-    for e in exprs[1:]:
-        acc = f"(({acc}) * {POLY_TOKEN_B} + ({e})) % {POLY_P}"
-    return acc
-
-
 def poly_hash_py(s: str, b: int = POLY_B, p: int = POLY_P) -> int:
     """Python mirror of poly_hash_token_col/sql (parameterized family)."""
     h = 0

@@ -241,12 +241,6 @@ def xxh3_64(data: bytes | str, seed: int = 0) -> int:
     return _hash_long(data, seed)
 
 
-def xxh3_64_signed(data: bytes | str, seed: int = 0) -> int:
-    """Same hash as a two's-complement int64 (Spark LongType convention)."""
-    h = xxh3_64(data, seed)
-    return h - (1 << 64) if h >= 1 << 63 else h
-
-
 # -- the reference's python hash API (util.cpp:16-68), bit-exact ------------
 
 

@@ -62,8 +62,8 @@ class DedupConfig:
     # (~6.8 sigma of register noise, plus empty-bin densification noise on
     # very small shingle sets) is dropped before the exact verify, so the
     # SAME corpus can cluster differently above vs below the threshold.
-    # The decision is recorded in DedupPipeline.policy (emitted into the
-    # scaling jsonl) so every artifact attributes which path produced it;
+    # The decision is recorded in DedupPipeline.policy so a caller can
+    # attribute which path produced its output;
     # pass use_minhash_prefilter=False to pin exact-only behavior, and see
     # BENCH/BASELINE.md section 7b for the measured crossover + recall.
     prefilter_threshold: float = 1.0e9  # measured both ways: BENCH/BASELINE.md §7b

@@ -16,7 +16,7 @@ aggregation as the MinHash builders.  Estimation is a JVM higher-order
 expression.  The dense pivot is pure JVM up to m=1024 (static unroll;
 element_at(map) is a linear scan, so that path is O(m^2) per group) and
 an Arrow numpy scatter per GROUP row above it — measured 9x on the VAC
-HLL cascade at p=12 (44.5 s -> 5.0 s over 20M elements, BENCH/newops_scale).
+HLL cascade at p=12 (44.5 s -> 5.0 s over 20M elements, BENCH/BASELINE.md §8).
 """
 
 from __future__ import annotations

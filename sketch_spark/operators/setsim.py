@@ -356,6 +356,14 @@ def _count_matrix_codes(code_lists_l, code_lists_r):
     return S
 
 
+def dense_block_count(docs_df: DataFrame, block_col: str) -> int:
+    """Hash blocks per group for ngram_overlap_dense: ceil(largest group's
+    rows / DENSE_BLOCK_ROWS), clamped to [1, DENSE_MAX_BLOCKS].  Runs one
+    groupBy-count census job."""
+    mx = docs_df.groupBy(block_col).count().agg(F.max("count")).first()[0] or 0
+    return min(DENSE_MAX_BLOCKS, max(1, -(-int(mx) // DENSE_BLOCK_ROWS)))
+
+
 def ngram_overlap_dense(
     docs_df: DataFrame,
     id_col: str,
@@ -364,7 +372,6 @@ def ngram_overlap_dense(
     t: int,
     block_col: str = "source",
     n_blocks: int | None = None,
-    target_block_rows: int | None = None,
 ) -> DataFrame:
     """Exact char-n-gram overlap self-join as per-block dense matrix
     products: (a, b, n_inter, n_a, n_b) with a < b, n_inter >= t, blocked
@@ -390,7 +397,7 @@ def ngram_overlap_dense(
          extracted and pd.factorize'd ONCE per group, and each doc leaves
          as (id, block, int32 code array) — downstream tasks compare codes,
          never strings, and the extraction is never replicated.
-      2. docs hash-split into B = ceil(rows/target) blocks per group; the
+      2. docs hash-split into B = dense_block_count() blocks per group; the
          CODE rows (a few hundred ints/doc) are replicated to their
          B(B+1)/2 block-pair tasks through one explicit
          repartition(K, keys) exchange — explicit so AQE cannot coalesce
@@ -399,8 +406,10 @@ def ngram_overlap_dense(
          ~45 MB of shuffle bytes, serializing the FLOPs).  Each task
          np.unique-compacts its codes and runs the sgemm.
 
-    Per-task memory is O(target·G + target²) regardless of group size and
-    parallelism grows with data, not with the group count.  A task whose
+    Per-task memory is O(r·G + r²) for r ≈ DENSE_BLOCK_ROWS rows per block
+    while B is below DENSE_MAX_BLOCKS (past it r grows with the largest
+    group, see DENSE_MAX_BLOCKS), and parallelism grows with data, not
+    with the group count.  A task whose
     vocab exceeds DENSE_MAX_VOCAB (natural long-text corpora) drops to a
     per-code scatter-add with identical output.  Phase 1 is per-GROUP
     (per source): the factorized code space must be group-global.  That
@@ -410,27 +419,12 @@ def ngram_overlap_dense(
     output is infeasible anyway; the inverted-index hybrid
     (overlap_join_hybrid) remains the unbounded-group path.
     """
-    import os
-
     import numpy as np
     import pandas as pd
 
     assert t >= 1
     spark = docs_df.sparkSession
-    if n_blocks is None:
-        target = target_block_rows or int(
-            os.environ.get("SPARK_GRAFT_DENSE_BLOCK_ROWS", DENSE_BLOCK_ROWS)
-        )
-        mx = (
-            docs_df.groupBy(block_col)
-            .count()
-            .agg(F.max("count"))
-            .first()[0]
-        )
-        if mx is None:
-            mx = 0
-        n_blocks = min(DENSE_MAX_BLOCKS, max(1, -(-int(mx) // target)))
-    B = int(n_blocks)
+    B = int(dense_block_count(docs_df, block_col) if n_blocks is None else n_blocks)
     dp = spark.sparkContext.defaultParallelism
 
     blk_type = docs_df.select(F.col(block_col)).schema[0].dataType.simpleString()

@@ -16,6 +16,10 @@ Spark shape:
   -> (conv_id, fp, pos) -> self-equi-join on fp (the shuffle IS the index)
   -> groupBy pair, keep witness positions -> exact verify via pandas UDF
   over the two texts (bounded O(L) extension around the witness).
+
+The numpy kernels are stateless: each call allocates plain temporaries
+that are freed when it returns, and each states its per-call peak.  The
+winnowing pass's bound is MAX_BATCH_CHARS of text per kernel call.
 """
 
 from __future__ import annotations
@@ -34,78 +38,6 @@ DEFAULT_K = 50  # k-gram size for rolling hashes
 
 _B = np.uint64(1000003)
 
-# ---------------------------------------------------------------------------
-# Per-WORKER buffer arena (VERDICT r3 next-round #4).  Each Spark task runs
-# in a reused Python worker process; the kernels below used to allocate
-# dozens of MB-scale numpy temporaries per task, which glibc serves via
-# mmap/munmap above the 128 KB threshold — every task re-faulted fresh pages
-# on this host's ~200 MB/s page-population path (BENCH/BASELINE.md §3b), the
-# measured cause of the substr stage's 32-core inversion.  The arena keeps
-# one named buffer per (role, shape, dtype) alive for the worker's lifetime;
-# kernel shapes are constant across tasks (fixed slab geometry, padded
-# tails), so after the first task every temporary is a warm-page reuse.
-# Workers are single-threaded (one task at a time per process), so a
-# module-level dict needs no locking.  All outputs that escape a kernel are
-# freshly allocated or caller-provided; only internal temporaries live here.
-# ---------------------------------------------------------------------------
-
-_ARENA: dict = {}
-
-
-def _buf(name: str, shape: tuple, dtype) -> np.ndarray:
-    """Named reusable buffer of an exact shape (uninitialized contents)."""
-    key = (name, shape, np.dtype(dtype).str)
-    a = _ARENA.get(key)
-    if a is None:
-        a = np.empty(shape, dtype=dtype)
-        _ARENA[key] = a
-    return a
-
-
-def _cap_buf(name: str, n: int, dtype) -> np.ndarray:
-    """Grow-only 1-D buffer; returns a length-n view."""
-    key = (name, np.dtype(dtype).str)
-    a = _ARENA.get(key)
-    if a is None or a.size < n:
-        cap = max(n, (a.size * 2) if a is not None else 0, 1 << 16)
-        a = np.empty(cap, dtype=dtype)
-        _ARENA[key] = a
-    return a[:n]
-
-
-def _pow_series(name: str, base: np.uint64, n: int) -> np.ndarray:
-    """First n powers base^0..base^(n-1) mod 2^64, cached grow-only."""
-    key = (name, "pow")
-    a = _ARENA.get(key)
-    have = a.size if a is not None else 0
-    if have < n:
-        cap = max(n, have * 2, 1 << 16)
-        new = np.empty(cap, dtype=np.uint64)
-        with np.errstate(over="ignore"):
-            if have == 0:
-                new[0] = np.uint64(1)
-                start = 1
-            else:
-                new[:have] = a
-                start = have
-            ext = np.full(cap - start, base, dtype=np.uint64)
-            np.cumprod(ext, out=ext)
-            np.multiply(ext, new[start - 1], out=ext)
-            new[start:] = ext
-        a = new
-        _ARENA[key] = a
-    return a[:n]
-
-
-def _arange(n: int) -> np.ndarray:
-    """First n of a cached int64 arange (read-only by convention)."""
-    key = ("arange", "i8")
-    a = _ARENA.get(key)
-    if a is None or a.size < n:
-        a = np.arange(max(n, 1 << 16), dtype=np.int64)
-        _ARENA[key] = a
-    return a[:n]
-
 
 # B is odd, hence invertible mod 2^64; Newton iteration for the inverse.
 def _inv_u64(b: np.uint64) -> np.uint64:
@@ -119,61 +51,48 @@ def _inv_u64(b: np.uint64) -> np.uint64:
 _BINV = _inv_u64(_B)
 
 
-def _kgram_hashes_codes(
-    a: np.ndarray, k: int, chunk: int = 1 << 22, out: np.ndarray | None = None
-) -> np.ndarray:
-    """Rolling k-gram hashes, computed in overlapping chunks so peak
-    temporary footprint stays ~100 MB regardless of input size.  The hash
-    of a k-gram depends only on its CONTENT (see _kgram_hashes_seg), so a
-    chunk overlapping the next by k-1 codes yields identical values —
-    important on hosts where faulting fresh pages is far slower than
-    reusing warm ones (measured ~200 MB/s vs ~5 GB/s here).  All internal
-    temporaries come from the per-worker arena; `out` (optional) receives
-    the hashes in place so the hot caller allocates nothing per batch."""
+def _pows(base: np.uint64, n: int) -> np.ndarray:
+    """base^0 .. base^(n-1) mod 2^64."""
+    p = np.full(n, base, dtype=np.uint64)
+    p[:1] = 1
+    with np.errstate(over="ignore"):
+        np.cumprod(p, out=p)
+    return p
+
+
+def _kgram_hashes_codes(a: np.ndarray, k: int, chunk: int = 1 << 22) -> np.ndarray:
+    """Rolling k-gram hashes, computed in chunks that overlap the next by
+    k-1 codes.  The hash of a k-gram depends only on its CONTENT (see
+    _kgram_hashes_seg), so chunking changes no value.  Per-call peak: the
+    uint64 output plus ~24 B x min(chunk, n) of chunk temporaries
+    (~100 MB at the default chunk), whatever the input size."""
     n = a.size - k + 1
     if n <= 0:
         return np.empty(0, dtype=np.uint64)
-    res = out[:n] if out is not None else np.empty(n, dtype=np.uint64)
-    s = 0
-    while s < n:
-        e = min(a.size, s + chunk + k - 1)
-        cnt = min(chunk, n - s)
-        _kgram_hashes_seg(a[s:e], k, out=res[s : s + cnt])
-        s += chunk
+    res = np.empty(n, dtype=np.uint64)
+    for s in range(0, n, chunk):
+        res[s : s + chunk] = _kgram_hashes_seg(a[s : s + chunk + k - 1], k)
     return res
 
 
-def _kgram_hashes_seg(
-    a: np.ndarray, k: int, out: np.ndarray | None = None
-) -> np.ndarray:
+def _kgram_hashes_seg(a: np.ndarray, k: int) -> np.ndarray:
     """Rolling polynomial hashes (mod 2^64) of all k-grams of a codepoint
     array, fully vectorized:  H[i] = B^(k-1) * B^i * (P[i+k] - P[i])  where
     P[t] = sum_{j<t} a[j] * Binv^j  (B odd => invertible mod 2^64).
     H[i] depends only on a[i:i+k] (the B^i cancels the Binv^i inside the
     prefix difference), so hashes computed over a CONCATENATION of many
     texts are identical to per-text hashes at the corresponding offsets —
-    what lets winnow_fingerprints run ONE pass per Arrow batch.
-    Power series are cached (deterministic); prefix/product temporaries are
-    arena buffers reused across tasks."""
+    what lets winnow_fingerprints run ONE pass per Arrow batch."""
     n = a.size - k + 1
     if n <= 0:
         return np.empty(0, dtype=np.uint64)
     with np.errstate(over="ignore"):
-        if a.dtype != np.uint64:
-            # cast into a reused buffer (C-style wrap, same as .astype)
-            ac = _cap_buf("kg_cast", a.size, np.uint64)
-            np.copyto(ac, a, casting="unsafe")
-            a = ac
-        binv_pows = _pow_series("binv_pows", _BINV, a.size)
-        b_pows = _pow_series("b_pows", _B, n)
-        tmp = _cap_buf("kg_tmp", a.size, np.uint64)
-        np.multiply(a, binv_pows, out=tmp)
-        prefix = _cap_buf("kg_prefix", a.size + 1, np.uint64)
-        prefix[0] = np.uint64(0)
-        np.cumsum(tmp, out=prefix[1:])
-        res = out[:n] if out is not None else np.empty(n, dtype=np.uint64)
-        np.subtract(prefix[k : k + n], prefix[:n], out=res)
-        np.multiply(res, b_pows, out=res)
+        x = a.astype(np.uint64)  # a copy (C-style wrap): scanned in place
+        x *= _pows(_BINV, a.size)
+        np.cumsum(x, out=x)  # x[t] = P[t+1]
+        res = x[k - 1 : k - 1 + n].copy()  # P[i+k]
+        res[1:] -= x[: n - 1]  # - P[i], with P[0] = 0
+        res *= _pows(_B, n)
         res *= np.uint64(pow(int(_B), k - 1, 1 << 64))
     return res
 
@@ -188,65 +107,30 @@ def _kgram_hashes(s: str, k: int) -> np.ndarray:
     return _kgram_hashes_codes(codes, k)
 
 
-def window_argmin(
-    v: np.ndarray, w: int, slab_blocks: int = 2048,
-    out: np.ndarray | None = None,
-) -> np.ndarray:
+def window_argmin(v: np.ndarray, w: int, slab_blocks: int = 2048) -> np.ndarray:
     """Leftmost argmin of every w-window of v in O(n), computed in slabs.
 
     Each slab covers slab_blocks w-sized blocks plus a w-1 overlap: a
     window's argmin depends only on the w values it covers, so running the
-    block kernel on the overlapping segment and keeping the first
-    slab_blocks*w window starts reproduces the global answer exactly.  The
-    final partial slab is padded (with the dtype-max sentinel, into a
-    reused buffer) to the full slab geometry, so every kernel invocation
-    sees IDENTICAL shapes and every temporary is a per-worker arena buffer
-    reused across slabs AND across tasks — fresh-page population on this
-    host runs ~20x slower than warm reuse (BENCH/BASELINE.md §3b); the
-    earlier per-call allocations were the measured term behind the substr
-    stage's 32-core inversion.  Padding is correct because kept windows
-    never read padded positions (the last kept window ends at the last
-    real element) and ties against the sentinel cannot arise inside them.
+    block kernel on the overlapping segment reproduces the global answer
+    for the slab's window starts exactly.  Per-call peak: the int64 output
+    plus ~40 B x slab_blocks*w of slab temporaries (~12 MB at the default
+    2048 blocks and w=151), whatever the input size.
 
-    `out` (optional, int64, size >= n-w+1) receives the result in place.
     Returns absolute indices into v; output size n - w + 1."""
     if not np.issubdtype(v.dtype, np.integer):
         raise TypeError(f"window_argmin requires an integer dtype, got {v.dtype}")
-    n = v.size
-    nw = n - w + 1
+    nw = v.size - w + 1
     if nw <= 0:
         return np.empty(0, dtype=np.int64)
+    res = np.empty(nw, dtype=np.int64)
     S = slab_blocks * w
-    if n <= S + w - 1:
-        res = out[:nw] if out is not None else np.empty(nw, dtype=np.int64)
-        _window_argmin_seg(v, w, out=res)
-        return res
-    res = out[:nw] if out is not None else np.empty(nw, dtype=np.int64)
-    INF = np.iinfo(v.dtype).max
-    seg_len = S + w - 1
-    s = 0
-    while s < nw:
-        e = min(n, s + seg_len)
-        take = min(S, nw - s)
-        if e - s == seg_len:
-            seg_view = v[s:e]
-        else:
-            pad = _buf("wam_padseg", (seg_len,), v.dtype)
-            pad[: e - s] = v[s:e]
-            pad[e - s :] = INF
-            seg_view = pad
-        part = res[s : s + take]
-        _window_argmin_seg(seg_view, w, out=part, n_keep=take,
-                           exact_geometry=True)
-        part += s
-        s += S
+    for s in range(0, nw, S):
+        np.add(_window_argmin_seg(v[s : s + S + w - 1], w), s, out=res[s : s + S])
     return res
 
 
-def _window_argmin_seg(
-    v: np.ndarray, w: int, out: np.ndarray | None = None,
-    n_keep: int | None = None, exact_geometry: bool = False,
-) -> np.ndarray:
+def _window_argmin_seg(v: np.ndarray, w: int) -> np.ndarray:
     """One-segment two-pass block decomposition (the sliding-window-minimum
     prefix/suffix trick): split v into w-sized blocks, compute per-block
     prefix and suffix argmins with vectorized scans, and stitch window i
@@ -254,111 +138,42 @@ def _window_argmin_seg(
     Bit-identical to np.argmin(sliding_window_view(v, w), axis=1) + arange
     (property-tested with heavy ties) but ~80x faster at w=151: the naive
     form is O(n*w) comparisons and dominated the whole pipeline's CPU.
-
-    Every temporary is an arena buffer keyed by (nblocks, w, dtype) — the
-    slab driver always presents the same geometry, so across tasks in one
-    worker this kernel allocates nothing.  `out`/`n_keep`: write only the
-    first n_keep window results into out (the slab driver's kept prefix).
     """
     n = v.size
     nw = n - w + 1
     nblocks = -(-n // w)
-    # sentinel = dtype max (ADVICE r2: was a hard-coded uint64 constant that
-    # overflowed np.full for signed inputs).  Correctness with max instead of
-    # +inf: padding can only tie a real element, never beat it, and both
-    # scans break ties toward the leftmost (real) position; the prev-row
-    # sentinel only needs "nothing is strictly smaller before index 0",
-    # which max satisfies together with the explicit is_new[:, 0] = True.
-    INF = np.iinfo(v.dtype).max
-    # Arena buffers are keyed by exact shape, so data-dependent nblocks
-    # (direct calls with small inputs: winnow group tails, small batches)
-    # would grow one never-freed buffer set PER DISTINCT SIZE on a
-    # long-lived worker.  Rounding nblocks up to a power of two bounds the
-    # arena to O(log) geometries; extra rows are all-sentinel and every
-    # scan is row-independent, so kept outputs are bit-identical
-    # (property-tested).  The slab driver passes exact_geometry=True — its
-    # segment shape is already constant across slabs and tasks, and pow2
-    # rounding there would double the hot path's footprint.
-    if not exact_geometry and nblocks > 1:
-        nblocks = 1 << (nblocks - 1).bit_length()
-    shp = (nblocks, w)
-    dt = v.dtype
-    vp = _buf("was_vp", shp, dt)
-    vpf = vp.reshape(-1)
-    vpf[:n] = v
-    vpf[n:] = INF
-    col = np.broadcast_to(_arange(w), shp)
-
-    # prefix argmin (leftmost: new argmin only on strict decrease)
-    pmin = _buf("was_pmin", shp, dt)
-    np.minimum.accumulate(vp, axis=1, out=pmin)
-    prev = _buf("was_prev", shp, dt)
-    prev[:, 0] = INF
-    prev[:, 1:] = pmin[:, :-1]
-    notnew = _buf("was_notnew", shp, np.bool_)
-    np.greater_equal(vp, prev, out=notnew)  # NOT (vp < prev)
-    cand = _buf("was_cand", shp, np.int64)
-    np.copyto(cand, col)
-    cand[notnew] = -1
-    cand[:, 0] = 0  # is_new[:, 0] = True
-    pam = _buf("was_pam", shp, np.int64)
-    np.maximum.accumulate(cand, axis=1, out=pam)
-
-    # suffix argmin (leftmost among minima: reversed scan updating on <=,
-    # so earlier-in-original wins ties); pmin/prev buffers are dead here
-    # and reused for the reversed scans
-    vr = vp[:, ::-1]
-    rmin = pmin
-    np.minimum.accumulate(vr, axis=1, out=rmin)
-    prevr = prev
-    prevr[:, 0] = INF
-    prevr[:, 1:] = rmin[:, :-1]
-    np.greater(vr, prevr, out=notnew)  # NOT (vr <= prevr)
-    np.copyto(cand, col)
-    cand[notnew] = -1
-    cand[:, 0] = 0
-    samr = _buf("was_samr", shp, np.int64)
-    np.maximum.accumulate(cand, axis=1, out=samr)
-    sam = _buf("was_sam", shp, np.int64)
-    np.subtract(w - 1, samr[:, ::-1], out=sam)
-
-    off = _arange(nblocks)[:, None] * w  # small (nblocks,1) temp
-    np.add(pam, off, out=pam)
-    np.add(sam, off, out=sam)
-    flat_pam = pam.reshape(-1)
-    flat_sam = sam.reshape(-1)
-    vflat = vpf
-
-    keep = nw if n_keep is None else n_keep
-    # window starts are contiguous 0..nw-1, so the index gathers of the
-    # original formulation are plain views: ia = flat_sam[:nw],
-    # ib = flat_pam[w-1 : w-1+nw]
-    ia = flat_sam[:keep]  # leftmost argmin of v[i .. end of i's block]
-    ib = flat_pam[w - 1 : w - 1 + keep]  # leftmost argmin of block-start .. j
-    va = _cap_buf("was_va", keep, dt)
-    vb = _cap_buf("was_vb", keep, dt)
-    np.take(vflat, ia, out=va)
-    np.take(vflat, ib, out=vb)
-    pick_a = _cap_buf("was_pick", keep, np.bool_)
-    np.less_equal(va, vb, out=pick_a)
-    # same-block windows (i//w == (i+w-1)//w) must take ia regardless
-    np.logical_or(pick_a, _same_block(keep, w), out=pick_a)
-    res = out[:keep] if out is not None else np.empty(keep, dtype=np.int64)
-    np.copyto(res, ib)
-    np.copyto(res, ia, where=pick_a)
-    return res
+    # the last block is padded with the dtype max (signed or unsigned):
+    # padding can only tie a real element, never beat it, and both scans
+    # break ties toward the leftmost (real) position, so no kept window
+    # ever selects it.
+    vp = np.full(nblocks * w, np.iinfo(v.dtype).max, dtype=v.dtype)
+    vp[:n] = v
+    blocks = vp.reshape(nblocks, w)
+    off = np.arange(0, nblocks * w, w)[:, None]
+    # leftmost argmin of block-start .. j
+    pam = (_running_argmin(blocks, strict=True) + off).reshape(-1)
+    # leftmost argmin of i .. block-end: a reversed scan that moves on
+    # ties, so the earlier-in-original position wins
+    rev = _running_argmin(blocks[:, ::-1], strict=False)[:, ::-1]
+    sam = (w - 1 - rev + off).reshape(-1)
+    # window starts are contiguous 0..nw-1, so both gathers are views
+    ia = sam[:nw]  # leftmost argmin of v[i .. end of i's block]
+    ib = pam[w - 1 : w - 1 + nw]  # leftmost argmin of block-start .. i+w-1
+    pick_a = vp[ia] <= vp[ib]
+    pick_a[::w] = True  # window i = q*w lies in one block: ia covers it
+    return np.where(pick_a, ia, ib)
 
 
-def _same_block(nw: int, w: int) -> np.ndarray:
-    """Cached boolean mask: window i lies entirely inside one w-block."""
-    key = ("same_block", w)
-    a = _ARENA.get(key)
-    if a is None or a.size < nw:
-        size = max(nw, 1 << 16)
-        i = _arange(size)
-        a = (i // w) == ((i + w - 1) // w)
-        _ARENA[key] = a
-    return a[:nw]
+def _running_argmin(x: np.ndarray, strict: bool) -> np.ndarray:
+    """Per row of x, the column of the running minimum: it moves on a
+    strict decrease (strict=True, so the first of equal minima is kept) or
+    on any non-increase (strict=False, the last)."""
+    m = np.minimum.accumulate(x, axis=1)
+    moved = np.empty(x.shape, dtype=np.bool_)
+    moved[:, 0] = True
+    cmp = np.less if strict else np.less_equal
+    cmp(x[:, 1:], m[:, :-1], out=moved[:, 1:])
+    return np.maximum.accumulate(np.where(moved, np.arange(x.shape[1]), -1), axis=1)
 
 
 def winnow_fingerprints(
@@ -375,15 +190,15 @@ def winnow_fingerprints(
     selected because each text only reads its own hash range) — the
     per-text numpy-call overhead used to dominate this stage's CPU.
 
-    Worker-memory bound: the concat/hash/argmin slabs scale with the
-    CHARS a kernel call sees (~24 B/char).  Arrow's 10k-row batch cap
+    Worker-memory bound: a kernel call's temporaries scale with the CHARS
+    it sees (~27 B/char, see MAX_BATCH_CHARS).  Arrow's 10k-row batch cap
     bounds that implicitly for ordinary conversations, but text volume —
     not row count — is the real resource, so each batch is additionally
-    split into <= MAX_BATCH_CHARS groups before the concat (pure driver-
-    side-free list slicing, no shuffle, selection unchanged: winnowing is
-    per-text content-local).  Slab memory per worker is therefore
-    constant in corpus AND conversation size — the property a 10^12-turn
-    run with adversarially long conversations needs."""
+    split into <= MAX_BATCH_CHARS groups before the concat (plain list
+    slicing, no shuffle, selection unchanged: winnowing is per-text
+    content-local), and a longer text takes _winnow_single_long.  Kernel
+    memory per call is therefore bounded in corpus AND conversation size,
+    and it is freed when the call returns."""
     w = L - k + 1
     assert w >= 1
 
@@ -419,90 +234,70 @@ def winnow_fingerprints(
     )
 
 
-# Upper bound on text volume per winnowing kernel call (~24 B/char of
-# slabs => ~800 MB per worker at the bound).  Above the bench/campaign
-# batch sizes (10k rows x ~3k chars ~ 30M), so measured walls are
-# unaffected; it exists for corpora whose per-batch text volume explodes.
+# Upper bound on text volume per winnowing kernel call.  Per-call peak of
+# _winnow_group: ~27 B/char of numpy temporaries (hashes, window argmins,
+# selection mask and np.unique copies; measured with tracemalloc), i.e.
+# ~850 MB at the bound, on top of the batch's own strings; all of it is
+# freed when the call returns.  Above bench.py's batch sizes (10k
+# rows x ~3k chars ~ 30M), so measured walls are unaffected; it exists for
+# corpora whose per-batch text volume explodes.
 MAX_BATCH_CHARS = 32_000_000
 
 
 def _winnow_group(convs: list, id_col: str, k: int, w: int) -> pd.DataFrame:
     ids = fps = poss = ()
     if convs:
-        codes = [
-            np.frombuffer(
-                t.encode("utf-32-le", "surrogatepass"), dtype=np.uint32
-            )
-            for _, t in convs
-        ]
-        lens = np.fromiter((c.size for c in codes), dtype=np.int64)
-        total = int(lens.sum())
-        # group concat + hash + winnow all land in per-worker arena
-        # buffers: these are the largest per-group arrays (tens of
-        # MB), reallocated per batch before — pure page-population
-        # tax on this host (see _ARENA note)
-        cat = _cap_buf("wf_codes", total, np.uint32)
-        o = 0
-        for c in codes:
-            cat[o : o + c.size] = c
-            o += c.size
-        allh = _kgram_hashes_codes(
-            cat, k, out=_cap_buf("wf_allh", max(total - k + 1, 1), np.uint64)
-        )
+        lens = np.fromiter((len(t) for _, t in convs), dtype=np.int64, count=len(convs))
         starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-        # ONE O(n) window-argmin pass over the whole group: every
-        # in-text window reads only in-text hash positions, so the
-        # global pass selects exactly what per-text passes would
-        # (boundary-mixed hashes sit outside every evaluated window).
-        nwam = allh.size - w + 1
-        wam = window_argmin(
-            allh, w,
-            out=_cap_buf("wf_wam", max(nwam, 1), np.int64)
-            if nwam > 0 else None,
+        # the concatenated code points die once hashed
+        allh = _kgram_hashes_codes(
+            np.concatenate([
+                np.frombuffer(t.encode("utf-32-le", "surrogatepass"), dtype=np.uint32)
+                for _, t in convs
+            ]),
+            k,
         )
         # Selection is fully vectorized across the group (the per-conv
         # np.unique + .tolist() loop was ~40% of warm kernel CPU at bench
         # scale): texts own DISJOINT global position ranges, so one global
-        # np.unique over the masked wam equals the per-text uniques, and
-        # np.searchsorted(starts) maps each selected position back to its
-        # text.  Value- and multiplicity-identical to the loop (asserted
-        # in tests/test_suffix.py).
-        mask = _cap_buf("wf_mask", max(nwam, 1), np.bool_)
-        mask[:nwam] = False
+        # np.unique over the masked window argmins equals the per-text
+        # uniques, and np.searchsorted(starts) maps each selected position
+        # back to its text.  Value- and multiplicity-identical to the loop
+        # (asserted in tests/test_suffix.py).
+        mask = np.zeros(max(allh.size - w + 1, 0), dtype=np.bool_)
         short_sel = []
-        for (_, _), st, ln in zip(convs, starts, lens):
-            n = int(ln) - k + 1
+        for st, ln in zip(starts.tolist(), lens.tolist()):
+            n = ln - k + 1
             if n <= 0:
                 continue
-            st = int(st)
             if n <= w:
                 # single evaluated window: leftmost argmin of the text's
                 # own hash range (identical to window_argmin's tie rule)
                 short_sel.append(st + int(np.argmin(allh[st : st + n])))
             else:
                 mask[st : st + n - w + 1] = True
-        parts = []
-        if nwam > 0:
-            parts.append(np.unique(wam[:nwam][mask[:nwam]]))
-        if short_sel:
-            parts.append(np.asarray(short_sel, dtype=np.int64))
-        if parts:
-            sel = np.sort(np.concatenate(parts)) if len(parts) > 1 else parts[0]
+        # ONE O(n) window-argmin pass over the whole group: every in-text
+        # window reads only in-text hash positions, so the global pass
+        # selects exactly what per-text passes would (boundary-mixed hashes
+        # sit outside every evaluated window)
+        sel = np.sort(np.concatenate((
+            np.unique(window_argmin(allh, w)[mask]),
+            np.asarray(short_sel, dtype=np.int64),
+        )))
+        if sel.size:
             ci = np.searchsorted(starts, sel, side="right") - 1
             cid_arr = np.empty(len(convs), dtype=object)
             for i, (cid, _) in enumerate(convs):
                 cid_arr[i] = cid
             ids = cid_arr[ci]
             fps = allh[sel].astype(np.int64)
-            poss = (sel - starts[ci]).astype(np.int64)
+            poss = sel - starts[ci]
     return pd.DataFrame({id_col: ids, "fp": fps, "pos": poss})
 
 
 def _winnow_single_long(cid, text: str, id_col: str, k: int, w: int) -> pd.DataFrame:
     """Chunked winnow for ONE text longer than MAX_BATCH_CHARS, so kernel
-    slab memory stays capped even for an adversarially long conversation
-    (previously such a text was processed whole, growing the grow-only
-    arena to O(text) and pinning it for the worker's lifetime).
+    memory stays capped even for an adversarially long conversation.
 
     Bit-identical to the unchunked pass: k-gram hashes are content-local
     (_kgram_hashes_seg) and window_argmin is the LEFTMOST argmin — purely
@@ -512,7 +307,9 @@ def _winnow_single_long(cid, text: str, id_col: str, k: int, w: int) -> pd.DataF
     the whole-text pass would.  Positions selected twice (a window in the
     owned range and one in the previous chunk's read-ahead pointing at the
     same minimum) are deduplicated like the whole-text np.unique.  Peak
-    footprint: the input row's own string (unavoidable) + capped slabs.
+    footprint: the input row's own string (unavoidable), one chunk's kernel
+    call (bounded like a MAX_BATCH_CHARS group, see there) and the selected
+    (pos, fp) list, ~2/(w+1) of the text's positions.
     """
     n_chars = len(text)
     nk = n_chars - k + 1
@@ -532,14 +329,8 @@ def _winnow_single_long(cid, text: str, id_col: str, k: int, w: int) -> pd.DataF
         codes = np.frombuffer(
             text[ws:ce].encode("utf-32-le", "surrogatepass"), dtype=np.uint32
         )
-        m = codes.size - k + 1
-        allh = _kgram_hashes_codes(
-            codes, k, out=_cap_buf("wfl_allh", m, np.uint64)
-        )
-        nw = m - w + 1
-        wam = window_argmin(
-            allh, w, out=_cap_buf("wfl_wam", max(nw, 1), np.int64)
-        )
+        allh = _kgram_hashes_codes(codes, k)
+        wam = window_argmin(allh, w)
         for s_rel in np.unique(wam[: we - ws]).tolist():
             p = ws + int(s_rel)
             if p not in seen:
@@ -605,11 +396,6 @@ def substring_candidate_pairs(
     )
 
 
-def _buf2(name: str, m: int, W: int, dtype) -> np.ndarray:
-    """2-D view over a grow-only 1-D arena buffer (shape varies per call)."""
-    return _cap_buf(name, m * W, dtype).reshape(m, W)
-
-
 def _witness_spans(
     flat: list[tuple[int, str, str, int, int]], chunk: int = 4096
 ) -> np.ndarray:
@@ -623,23 +409,19 @@ def _witness_spans(
     pad sentinels per side (padding never matches), the right run is the
     index of the first mismatch in the aligned gather A[pa+t] == B[pb+t],
     the left run likewise with reversed offsets, and explicit bounds masks
-    reproduce the loops' boundary conditions."""
+    reproduce the loops' boundary conditions.  Per-call peak: the output
+    plus ~25 B x chunk x W for the widest segment W of a chunk (~45 MB at
+    the default chunk and verify_substring_pairs' 2L+64-char segments)."""
     n = len(flat)
     spans = np.zeros(n, dtype=np.int64)
-    PAD_A = np.uint32(0xFFFFFFFF)
-    PAD_B = np.uint32(0xFFFFFFFE)
     for lo in range(0, n, chunk):
         part = flat[lo : lo + chunk]
         m = len(part)
         la = np.fromiter((len(r[1]) for r in part), dtype=np.int64, count=m)
         lb = np.fromiter((len(r[2]) for r in part), dtype=np.int64, count=m)
         W = int(max(la.max(), lb.max(), 1))
-        # all (m, W) temporaries are arena views (see _ARENA note): the
-        # equality matrices here were ~50 MB of fresh allocations per chunk
-        A = _buf2("ws_A", m, W, np.uint32)
-        B = _buf2("ws_B", m, W, np.uint32)
-        A[...] = PAD_A
-        B[...] = PAD_B
+        A = np.full((m, W), 0xFFFFFFFF, dtype=np.uint32)
+        B = np.full((m, W), 0xFFFFFFFE, dtype=np.uint32)
         for i, (_, sa, sb, _, _) in enumerate(part):
             if sa:
                 A[i, : len(sa)] = np.frombuffer(
@@ -651,61 +433,34 @@ def _witness_spans(
                 )
         pa = np.fromiter((r[3] for r in part), dtype=np.int64, count=m)[:, None]
         pb = np.fromiter((r[4] for r in part), dtype=np.int64, count=m)[:, None]
-        t = _arange(W)[None, :]
-        rowoff = (_arange(m) * W)[:, None]  # flat-gather row offsets
+        t = np.arange(W)[None, :]
+        rowoff = np.arange(0, m * W, W)[:, None]
 
-        def _gather(mat, idx, name):
-            g = _buf2(name, m, W, np.uint32)
-            np.take(mat.reshape(-1), idx, out=g)
-            return g
-
-        idxa = _buf2("ws_idxa", m, W, np.int64)
-        idxb = _buf2("ws_idxb", m, W, np.int64)
-        mism = _buf2("ws_mism", m, W, np.bool_)
-        bnd = _buf2("ws_bnd", m, W, np.bool_)
+        def gather(mat, idx):
+            # idx: (m, W) in-row column indices, clipped into the row
+            np.clip(idx, 0, W - 1, out=idx)
+            idx += rowoff
+            return mat.reshape(-1)[idx]
 
         # right extension: first t with A[pa+t] != B[pb+t] (or out of range)
-        np.add(pa, t, out=idxa)
-        np.minimum(idxa, W - 1, out=idxa)
-        np.add(idxa, rowoff, out=idxa)
-        np.add(pb, t, out=idxb)
-        np.minimum(idxb, W - 1, out=idxb)
-        np.add(idxb, rowoff, out=idxb)
-        ga = _gather(A, idxa, "ws_ga")
-        gb = _gather(B, idxb, "ws_gb")
-        np.equal(ga, gb, out=mism)  # holds EQ for now
-        np.less(t, la[:, None] - pa, out=bnd)  # pa + t < la
-        np.logical_and(mism, bnd, out=mism)
-        np.less(t, lb[:, None] - pb, out=bnd)  # pb + t < lb
-        np.logical_and(mism, bnd, out=mism)
+        eq = gather(A, pa + t) == gather(B, pb + t)
+        eq &= t < la[:, None] - pa  # pa + t < la
+        eq &= t < lb[:, None] - pb  # pb + t < lb
         # all-True row (both segments match through every in-bounds t, e.g.
         # identical full-width segments at pos 0): argmax(all-False) is 0,
         # but the loop semantics give the full in-bounds run
-        full = mism.all(axis=1)
-        np.logical_not(mism, out=mism)  # now holds first-mismatch indicator
-        r_run = np.argmax(mism, axis=1)
+        full = eq.all(axis=1)
+        r_run = np.argmax(~eq, axis=1)
         if full.any():
             r_run = np.where(
                 full, np.minimum(la - pa.ravel(), lb - pb.ravel()), r_run
             )
-        # left side always has a False within range (the bound fails at
-        # t = pa <= W-1), so argmax is safe there
-        # left extension: first t with A[pa-1-t] != B[pb-1-t] (or t >= pa/pb)
-        np.subtract(pa - 1, t, out=idxa)
-        np.maximum(idxa, 0, out=idxa)
-        np.add(idxa, rowoff, out=idxa)
-        np.subtract(pb - 1, t, out=idxb)
-        np.maximum(idxb, 0, out=idxb)
-        np.add(idxb, rowoff, out=idxb)
-        ga = _gather(A, idxa, "ws_ga")
-        gb = _gather(B, idxb, "ws_gb")
-        np.equal(ga, gb, out=mism)
-        np.less(t, pa, out=bnd)  # pa - 1 - t >= 0
-        np.logical_and(mism, bnd, out=mism)
-        np.less(t, pb, out=bnd)  # pb - 1 - t >= 0
-        np.logical_and(mism, bnd, out=mism)
-        np.logical_not(mism, out=mism)
-        l_run = np.argmax(mism, axis=1)
+        # left extension: first t with A[pa-1-t] != B[pb-1-t] (or t >= pa/pb);
+        # the bound fails at t = pa <= W-1, so every row has a mismatch
+        eq = gather(A, pa - 1 - t) == gather(B, pb - 1 - t)
+        eq &= t < pa  # pa - 1 - t >= 0
+        eq &= t < pb  # pb - 1 - t >= 0
+        l_run = np.argmax(~eq, axis=1)
         spans[lo : lo + m] = l_run + r_run
     return spans
 
@@ -819,41 +574,6 @@ def verify_substring_pairs(
     )
 
 
-def _pretouch_kernels(n_chars: int, L: int = DEFAULT_L, k: int = DEFAULT_K) -> int:
-    """Run the winnowing + witness kernels once on synthetic input of the
-    given size INSIDE the current worker, so every named arena buffer is
-    allocated and its pages are populated before real data arrives.
-
-    Why this exists: on this host, faulting fresh anonymous pages runs
-    ~20-50x slower than reusing warm ones (BENCH/BASELINE.md §3b), and the
-    cost lands wherever the FIRST real task runs — measured as a stochastic
-    10-130 s swing of the substr stage's first pass (BENCH/logs/
-    substr_probe_*.out: winnow 9.5 s with warm worker arenas vs 63.4 s
-    cold, identical code and input).  A long-running cluster pays this once
-    per executor lifetime and never again; a benchmark that recreates the
-    JVM + workers per run pays it inside the timed region unless the warmup
-    populates the same pages first.  Running the real kernels (not plain
-    np.empty) is the faithful pre-touch: it builds the exact (name, shape,
-    dtype)-keyed buffers — including the chunked rolling-hash temporaries
-    and the window-argmin slab set — that the real pass will request.
-    """
-    n_chars = max(int(n_chars), L + k)
-    cat = _cap_buf("wf_codes", n_chars, np.uint32)
-    cat[...] = np.uint32(97)
-    cat[::7] += np.uint32(1)  # non-degenerate hashes; results are discarded
-    w = L - k + 1
-    allh = _kgram_hashes_codes(
-        cat, k, out=_cap_buf("wf_allh", n_chars - k + 1, np.uint64)
-    )
-    nwam = allh.size - w + 1
-    if nwam > 0:
-        window_argmin(allh, w, out=_cap_buf("wf_wam", nwam, np.int64))
-    seg = 2 * L + 64
-    flat = [(i, "a" * seg, "a" * seg, L, L) for i in range(4096)]
-    _witness_spans(flat)
-    return sum(a.nbytes for a in _ARENA.values())
-
-
 def pretouch_for(
     spark,
     transcripts_df,
@@ -861,46 +581,11 @@ def pretouch_for(
     text_col: str = "text",
     margin: float = 1.6,
 ) -> int:
-    """Size and run pretouch_arena for a transcript table — THE shared
-    sizing policy (total_chars * margin / n_tasks, capped by the winnow
-    in-batch char bound MAX_BATCH_CHARS, +1 KiB pad).  bench.py and
-    BENCH/scaling.py both call this so the two harnesses cannot drift
-    (they previously carried verbatim copies of the sizing block)."""
-    from pyspark.sql import functions as _F
-
-    total_chars = (
-        transcripts_df.agg(_F.sum(_F.length(text_col))).collect()[0][0] or 0
-    )
-    per_task = min(
-        int(total_chars * margin / n_tasks), int(MAX_BATCH_CHARS)
-    ) + 1024
-    return pretouch_arena(spark, n_tasks, per_task)
-
-
-def pretouch_arena(
-    spark, n_tasks: int, chars_per_task: int, L: int = DEFAULT_L, k: int = DEFAULT_K
-) -> int:
-    """Populate the per-worker kernel arenas across all Python workers.
-
-    Schedules n_tasks trivial rows through mapInPandas; each task calls
-    _pretouch_kernels sized to the text volume a real winnowing task will
-    see (caller passes ~total_chars/n_partitions with margin).  Untimed-
-    warmup use only — a real cluster's long-running executors amortize
-    this to zero (see _pretouch_kernels).  Returns total arena bytes
-    reported by the workers (sum over tasks; tasks on the same worker
-    report the same arena)."""
-    from pyspark.sql import functions as _F
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"touched": [_pretouch_kernels(chars_per_task, L, k)] * len(pdf)}
-            )
-
-    df = spark.range(n_tasks).repartition(n_tasks).mapInPandas(
-        gen, schema="touched long"
-    )
-    return int(df.agg(_F.sum("touched")).collect()[0][0] or 0)
+    """No-op kept for bench.py, which calls it during its untimed warm-up
+    and prints the result.  It used to pre-populate per-worker kernel
+    buffers; the kernels now allocate plain temporaries per call, so there
+    is nothing to warm.  Runs no Spark job and returns 0 (bytes touched)."""
+    return 0
 
 
 def substring_pairs(

@@ -84,18 +84,30 @@ WITH tk AS (
 # would each recompute the whole per-character fold).  Persisting the small
 # intermediate (one row per doc) computes each fold exactly once and lets
 # sibling queries share it.
+#
+# Both driver-side memos are keyed (applicationId, ...) and hold the live
+# application only: one process runs one SparkContext at a time, so an
+# entry under another id belongs to a stopped session (its cached blocks
+# are gone) and is dropped before the new one is stored.
 _MEMO: dict = {}
+
+
+def _keep_live_app(store: dict, key: tuple) -> None:
+    for stale in [k for k in store if k[0] != key[0]]:
+        del store[stale]
 
 
 def _memo(key, build):
     if key not in _MEMO:
+        _keep_live_app(_MEMO, key)
         df = build().persist()
         df.count()
         _MEMO[key] = df
     return _MEMO[key]
 
 
-# scan-split census per (sf_dir, table): computed once, driver-side only
+# scan-split census per (application, sf_dir, table): computed once,
+# driver-side only
 _SCAN_SPLITS: dict = {}
 
 
@@ -126,6 +138,7 @@ def _scan(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     # across a stop/recreate cycle and hand the new session a stale count.
     key = (spark.sparkContext.applicationId, sf_dir, table)
     if key not in _SCAN_SPLITS:
+        _keep_live_app(_SCAN_SPLITS, key)
         # driver-side split census (computes FilePartitions, runs no job)
         _SCAN_SPLITS[key] = df.rdd.getNumPartitions()
     p = spark.sparkContext.defaultParallelism
@@ -206,7 +219,7 @@ def _poly_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "h60 array<long>, fp long",
         )
 
-    return _memo(("polydocs", spark.sparkContext.applicationId, sf_dir), build)
+    return _memo((spark.sparkContext.applicationId, "polydocs", sf_dir), build)
 
 
 def _doc_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -375,7 +388,7 @@ def q05_oneperm_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "register_idx", F.col("register_value").cast("long"))
         )
 
-    return _memo(("regs", spark.sparkContext.applicationId, sf_dir), build)
+    return _memo((spark.sparkContext.applicationId, "regs", sf_dir), build)
 
 
 Q05_SQL = (
@@ -886,17 +899,13 @@ def q15_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     risk.  Value-identical to the r5 plan (tests/test_setsim.py) and to
     the unchanged oracle.  |A∪B| = n_a + n_b - n_inter exactly (distinct
     sets), matching the oracle's list_distinct(concat)."""
-    from sketch_spark.operators.setsim import ngram_overlap_dense
+    from sketch_spark.operators.setsim import dense_block_count, ngram_overlap_dense
 
     d = _docs(spark, sf_dir).select("doc_id", "source", "text")
-    key = ("dense_blocks", spark.sparkContext.applicationId, sf_dir)
+    key = (spark.sparkContext.applicationId, "dense_blocks", sf_dir)
     if key not in _SCAN_SPLITS:
-        from sketch_spark.operators import setsim as _ss
-
-        mx = d.groupBy("source").count().agg(F.max("count")).first()[0] or 0
-        _SCAN_SPLITS[key] = min(
-            _ss.DENSE_MAX_BLOCKS, max(1, -(-int(mx) // _ss.DENSE_BLOCK_ROWS))
-        )
+        _keep_live_app(_SCAN_SPLITS, key)
+        _SCAN_SPLITS[key] = dense_block_count(d, "source")
     pairs = ngram_overlap_dense(
         d, "doc_id", "text", NG, NG_MIN_INTER,
         block_col="source", n_blocks=_SCAN_SPLITS[key],

@@ -115,6 +115,23 @@ def test_queries_are_ansi_safe(spark):
         EQ._MEMO.clear()
 
 
+def test_memo_holds_live_application_only(spark, monkeypatch):
+    """An entry memoized under another applicationId (a stopped session)
+    is dropped when the live application stores its first entry, so the
+    memo never outlives one SparkContext."""
+    from sketch_spark.plans import entry_queries as EQ
+
+    monkeypatch.setattr(EQ, "_MEMO", {})
+    live = spark.sparkContext.applicationId
+    stale = EQ._memo(("app-stopped", "t"), lambda: spark.range(3))
+    fresh = EQ._memo((live, "t"), lambda: spark.range(3))
+    try:
+        assert list(EQ._MEMO) == [(live, "t")]
+    finally:
+        stale.unpersist()
+        fresh.unpersist()
+
+
 @pytest.mark.parametrize("name", sorted(E.queries().keys()))
 def test_query_vs_oracle(spark, duck, name):
     fn = E.queries()[name]

@@ -30,9 +30,15 @@ def test_window_argmin_matches_naive():
     including heavy ties (value range 0..4 forces repeated minima) and
     window/block boundary interactions."""
     rng = np.random.default_rng(3)
-    for _ in range(300):
-        n = int(rng.integers(1, 1500))
-        w = int(rng.integers(1, 200))
+
+    def shapes():
+        for _ in range(300):
+            yield int(rng.integers(1, 1500)), int(rng.integers(1, 200))
+        # many distinct sizes at the production window (w = L - k + 1)
+        for n in rng.integers(151, 60_000, size=100):
+            yield int(n), 151
+
+    for n, w in shapes():
         if n - w + 1 <= 0:
             continue
         v = rng.integers(0, 5, size=n).astype(np.uint64)
@@ -52,6 +58,36 @@ def test_kgram_hashes_chunked_equals_one_pass():
         one = suffix._kgram_hashes_seg(a, k)
         chunked = suffix._kgram_hashes_codes(a, k, chunk=777)
         assert np.array_equal(one, chunked)
+
+
+def test_kernel_peak_memory_is_output_plus_slab():
+    """The slab loop of window_argmin and the chunk loop of
+    _kgram_hashes_codes bound each call's peak: on 3M elements with small
+    slabs/chunks, traced numpy allocations stay within the output array
+    plus a few MB, and nothing outlives the call."""
+    import tracemalloc
+
+    rng = np.random.default_rng(21)
+    n = 3_000_000
+    v = rng.integers(0, 1 << 62, size=n).astype(np.uint64)
+    codes = rng.integers(32, 1 << 16, size=n).astype(np.uint32)
+    slack = 4 << 20
+    for name, call, out_bytes in (
+        ("window_argmin", lambda: suffix.window_argmin(v, 151, slab_blocks=16),
+         (n - 150) * 8),
+        ("kgram", lambda: suffix._kgram_hashes_codes(codes, 50, chunk=1 << 16),
+         (n - 49) * 8),
+    ):
+        tracemalloc.start()
+        try:
+            out = call()
+            assert out.nbytes == out_bytes
+            del out
+            current, peak = tracemalloc.get_traced_memory()
+        finally:
+            tracemalloc.stop()
+        assert peak <= out_bytes + slack, (name, peak, out_bytes)
+        assert current < slack, (name, current)
 
 
 def test_winnow_batch_equals_per_text():
@@ -207,28 +243,6 @@ def test_substring_hot_bucket_routing_bit_identical(spark):
     assert c == h and len(c) > 0
 
 
-def test_pretouch_then_kernels_identical():
-    """_pretouch_kernels warms the arena without changing any later kernel
-    result: hashes/argmin computed after a pre-touch (buffers dirty with
-    synthetic garbage) equal fresh-module results."""
-    rng = np.random.default_rng(11)
-    codes = rng.integers(32, 1 << 16, size=50_000, dtype=np.uint32)
-    before_h = suffix._kgram_hashes_codes(codes.copy(), 50).copy()
-    before_w = suffix.window_argmin(before_h, 151).copy()
-    touched = suffix._pretouch_kernels(300_000)
-    assert touched > 0
-    after_h = suffix._kgram_hashes_codes(codes.copy(), 50).copy()
-    after_w = suffix.window_argmin(after_h, 151).copy()
-    np.testing.assert_array_equal(before_h, after_h)
-    np.testing.assert_array_equal(before_w, after_w)
-    # witness spans likewise unaffected by dirty arena state
-    flat = [(0, "x" * 120 + "SHARED" * 40 + "y" * 5, "z" * 3 + "SHARED" * 40, 125, 8)]
-    s1 = suffix._witness_spans(flat).copy()
-    suffix._pretouch_kernels(100_000)
-    s2 = suffix._witness_spans(flat).copy()
-    np.testing.assert_array_equal(s1, s2)
-
-
 def test_winnow_char_group_split_bit_identical(spark, monkeypatch):
     """Forcing the in-batch char bound to bind (tiny MAX_BATCH_CHARS) must
     not change the selected fingerprints: winnowing is per-text
@@ -253,39 +267,6 @@ def test_winnow_char_group_split_bit_identical(spark, monkeypatch):
         for r in S.winnow_fingerprints(conv, "full_text", "conv_id", 120, 30).collect()
     )
     assert base == split and len(base) > 0
-
-
-def test_window_argmin_arena_geometries_bounded():
-    """Data-dependent direct calls must not grow one arena buffer set per
-    distinct input size (review r4): geometries are pow2-bucketed, so ~100
-    distinct sizes leave O(log) distinct was_vp keys; the slab driver's
-    exact canonical geometry is unaffected.  Results stay bit-identical to
-    the naive argmin (padding rows are all-sentinel and row-independent)."""
-    rng = np.random.default_rng(11)
-    w = 151
-    before = {k for k in suffix._ARENA if k[0] == "was_vp"}
-    for n in rng.integers(w, 60_000, size=100):
-        n = int(n)
-        v = rng.integers(0, 7, size=n).astype(np.uint64)
-        got = suffix.window_argmin(v, w)
-        win = np.lib.stride_tricks.sliding_window_view(v, w)
-        want = np.argmin(win, axis=1) + np.arange(win.shape[0])
-        assert np.array_equal(got, want), n
-    new = {k for k in suffix._ARENA if k[0] == "was_vp"} - before
-    # pow2 bucketing: nblocks in [1, ceil(60000/151)=398] -> at most
-    # log2(512)+1 = 10 distinct geometries for this dtype
-    assert len(new) <= 10, sorted(new)
-
-
-def test_window_argmin_seg_exact_geometry_identical():
-    """exact_geometry=True (slab driver) and the default pow2 padding give
-    bit-identical outputs for the same segment."""
-    rng = np.random.default_rng(17)
-    for n, w in ((1000, 151), (777, 31), (50, 7)):
-        v = rng.integers(0, 5, size=n).astype(np.uint64)
-        a = suffix._window_argmin_seg(v.copy(), w).copy()
-        b = suffix._window_argmin_seg(v.copy(), w, exact_geometry=True).copy()
-        assert np.array_equal(a, b), (n, w)
 
 
 def test_winnow_single_long_chunked_bit_identical():
