@@ -1,6 +1,6 @@
 """End-to-end near-duplicate detection + clustering pipeline (the north rule).
 
-Stages (each checkpointable, each with counters):
+Stages (each with counters; the first six checkpointable):
 
   conv       transcripts -> one row per conversation (stable turn ordering,
              full-text hash, sorted distinct shingle-hash array) — 1 shuffle
@@ -8,16 +8,20 @@ Stages (each checkpointable, each with counters):
              densification in one map-only numpy kernel (0 shuffles)
   exact      full-text-hash groups -> star edges (catches 0-shingle convs)
   cands      LSH bands (rpr registers/band) -> capped buckets -> pairs
-  verify     optional MinHash pre-filter (j_est >= tau_pre; auto policy in
-             DedupConfig) then EXACT shingle-set Jaccard via
+  verify     MinHash pre-filter (j_est >= tau_pre) when the auto policy in
+             DedupConfig enables it, then EXACT shingle-set Jaccard via
              array_intersect (conversations are bounded, so the exact set
              fits the row) -> pairs with j >= tau
   substr     winnowing fingerprints -> long-shared-substring pairs
   cc         alternating large/small-star connected components
   clusters   every conv labeled; non-dup convs are their own cluster
 
-DedupPipeline.run(transcripts) builds conv and hands it to run_from_conv,
-which runs every later stage.  document_clusters (the flagship
+DedupPipeline.run(transcripts) builds conv and hands it to run_from_conv.
+Every stage after conv is declared once in STAGES as (name, inputs, stage
+method) and run by CheckpointManager.run_stages: each stage starts on a
+pool thread when its inputs are done, so exact, substr and the two conv
+probes (census, median) overlap the sig -> cands -> verify chain, and cc
+and counters follow.  document_clusters (the flagship
 __spark_entry__.entry()) builds a conv table from a flat documents table
 instead — word-level shingles, one document per conversation — and runs
 the same run_from_conv: there is one clustering path.
@@ -33,7 +37,7 @@ import hashlib
 import json
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from sketch_spark.operators import cc as cc_mod
@@ -49,7 +53,6 @@ class DedupConfig:
     rpr: int = 2  # registers per band -> m/rpr bands
     bucket_cap: int = 64
     tau_pre: float = 0.2  # MinHash candidate pre-filter threshold
-    use_minhash_prefilter: bool | None = None  # None = auto (see below)
     # Exact verify is cheaper on bounded convs (array_intersect is a native
     # expression; zip_with over 128 registers is an interpreted HOF); the
     # pre-filter pays only when the exact shingle arrays become the
@@ -63,18 +66,13 @@ class DedupConfig:
     # very small shingle sets) is dropped before the exact verify, so the
     # SAME corpus can cluster differently above vs below the threshold.
     # The decision is recorded in DedupPipeline.policy so a caller can
-    # attribute which path produced its output;
-    # pass use_minhash_prefilter=False to pin exact-only behavior, and see
-    # BENCH/BASELINE.md section 7b for the measured crossover + recall.
+    # attribute which path produced its output; an infinite threshold pins
+    # exact-only behavior.  See BENCH/BASELINE.md section 7b for the
+    # measured crossover + recall.
     prefilter_threshold: float = 1.0e9  # measured both ways: BENCH/BASELINE.md §7b
     tau: float = 0.5  # exact-Jaccard acceptance threshold
     substring_L: int = 200
     substring_k: int = 50
-    enable_substring: bool = True
-    # optional secondary SimHash Hamming verification (north-rule surface;
-    # redundant when exact verification is on, so default off)
-    use_simhash_verify: bool = False
-    simhash_max_hamming: int = 16
     # >0 enables per-partition resume for the conv stage (north rule:
     # per-partition lineage): conv rows are hash-assigned to
     # resume_partitions buckets by pmod(xxhash64(conv_id), P) and each
@@ -90,6 +88,23 @@ class DedupConfig:
         return hashlib.sha256(
             json.dumps({**asdict(self), "_schema": 3}, sort_keys=True).encode()
         ).hexdigest()[:16]
+
+
+# Every stage after conv: (name, inputs, DedupPipeline method).  The method
+# is called with its inputs' results; the name is the stage's job group and
+# checkpoint key.  census and median are conv probes for counters and the
+# verify policy; median is not started when verify resumes.
+STAGES = (
+    ("sig", ("conv",), "sig_stage"),
+    ("exact", ("conv",), "exact_stage"),
+    ("substr", ("conv",), "substr_stage"),
+    ("census", ("conv",), "_conv_census"),
+    ("median", ("conv",), "_median_shingles"),
+    ("cands", ("sig",), "cands_stage"),
+    ("verify", ("cands", "sig", "conv", "median"), "verify_stage"),
+    ("cc", ("conv", "exact", "verify", "substr"), "cc_stage"),
+    ("counters", ("census", "cc"), "counters_stage"),
+)
 
 
 def document_clusters(
@@ -115,17 +130,10 @@ def document_clusters(
     shingles = F.array_sort(
         F.array_distinct(T.shingle_hashes_col(text, cfg.shingle_n, cfg.seed))
     )
-    conv = pipe.ckpt.run(
-        "conv",
-        lambda: docs.select(
-            conv_id.alias("conv_id"),
-            cid,
-            text.alias("full_text"),
-            full_hash,
-            full_hash2,
-            shingles.alias("shingles"),
-        ),
-    )
+    conv = pipe.ckpt.run("conv", lambda: docs.select(
+        conv_id.alias("conv_id"), cid, text.alias("full_text"), full_hash,
+        full_hash2, shingles.alias("shingles"),
+    ))
     clusters = pipe.run_from_conv(conv)["clusters"]
     return clusters.select(
         F.col("conv_id").alias(id_col),
@@ -139,55 +147,40 @@ def document_clusters(
 
 
 class DedupPipeline:
-    def __init__(
-        self,
-        spark: SparkSession,
-        cfg: DedupConfig | None = None,
-        checkpoint_dir: str | None = None,
-    ):
+    def __init__(self, spark: SparkSession, cfg: DedupConfig | None = None,
+                 checkpoint_dir: str | None = None):
         self.spark = spark
         self.cfg = cfg or DedupConfig()
         self.counters: dict[str, int] = {}
         self.policy: dict = {}  # auto-decisions taken this run (lineage)
-        self.ckpt = CheckpointManager(
-            spark,
-            checkpoint_dir or "",
-            self.cfg.config_hash(),
-            enabled=checkpoint_dir is not None,
-        )
+        self.ckpt = CheckpointManager(spark, checkpoint_dir or "",
+                                      self.cfg.config_hash(),
+                                      enabled=checkpoint_dir is not None)
 
     # -- stages ------------------------------------------------------------
     def conv_stage(self, t: DataFrame) -> DataFrame:
         cfg = self.cfg
-        if cfg.resume_partitions > 0:
-            P = cfg.resume_partitions
-            # coalesce(.., 0): pmod(xxhash64(NULL), P) is NULL, which would
-            # match NO bucket and silently drop null-conv_id turns that the
-            # resume_partitions=0 path keeps (r5 ADVICE #2) — route the
-            # null group through bucket 0 in BOTH the turn filter and the
-            # output part column so the two paths agree
-            part = F.coalesce(
-                F.pmod(F.xxhash64("conv_id"), F.lit(P)), F.lit(0)
-            ).cast("int")
+        P = cfg.resume_partitions
+        if P == 0:
+            return self.ckpt.run(
+                "conv", lambda: transcripts.conv_table(t, cfg.shingle_n, cfg.seed)
+            )
+        # coalesce(.., 0): pmod(xxhash64(NULL), P) is NULL, which would
+        # match NO bucket and silently drop null-conv_id turns that the
+        # resume_partitions=0 path keeps (r5 ADVICE #2) — route the null
+        # group through bucket 0 in BOTH the turn filter and the output
+        # part column so the two paths agree
+        part = F.coalesce(F.pmod(F.xxhash64("conv_id"), F.lit(P)), F.lit(0)).cast("int")
 
-            def build_parts(missing: list[int]) -> DataFrame:
-                # whole conversations land in one bucket (hash of conv_id),
-                # so filtering TURNS by bucket before assembly computes
-                # exactly the requested conv partitions
-                src = t.where(part.isin([int(m) for m in missing]))
-                return transcripts.conv_table(src, cfg.shingle_n, cfg.seed)\
-                    .withColumn(
-                        "_part",
-                        F.coalesce(
-                            F.pmod(F.xxhash64("conv_id"), F.lit(P)), F.lit(0)
-                        ).cast("int"),
-                    )
+        def build(missing: list[int]) -> DataFrame:
+            # whole conversations land in one bucket (hash of conv_id), so
+            # filtering TURNS by bucket before assembly computes exactly
+            # the requested conv partitions
+            src = t.where(part.isin(missing))
+            return transcripts.conv_table(src, cfg.shingle_n, cfg.seed)\
+                .withColumn("_part", part)
 
-            out = self.ckpt.run_partitioned("conv", build_parts, P)
-            return out.drop("_part")
-        return self.ckpt.run(
-            "conv", lambda: transcripts.conv_table(t, cfg.shingle_n, cfg.seed)
-        )
+        return self.ckpt.run("conv", build, P).drop("_part")
 
     def sig_stage(self, conv: DataFrame) -> DataFrame:
         cfg = self.cfg
@@ -221,54 +214,43 @@ class DedupPipeline:
 
         return self.ckpt.run("cands", build)
 
+    def _conv_census(self, conv: DataFrame) -> Row:
+        """Row count + distinct cids of conv for the counters stage — a
+        conv probe, so it runs beside the chain instead of as a blocking
+        driver job after cc."""
+        return conv.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct("cid").alias("d"),
+        ).collect()[0]
+
     def _median_shingles(self, conv: DataFrame) -> int:
         """Policy input for the auto prefilter decision — one tiny agg over
-        the persisted conv table.  Split out so run() can overlap it with
-        the sig -> cands chain (it depends only on conv), removing one
-        blocking driver job (~0.2 s of pure latency) from the verify
-        stage's critical path."""
-        return int(
-            conv.agg(
-                F.expr("approx_percentile(size(shingles), 0.5)")
-            ).collect()[0][0]
-            or 0
-        )
+        the persisted conv table, run beside the sig -> cands chain so it
+        is off the verify stage's critical path."""
+        q = conv.agg(F.expr("approx_percentile(size(shingles), 0.5)"))
+        return int(q.collect()[0][0] or 0)
 
-    def verify_stage(
-        self,
-        cands: DataFrame,
-        sig: DataFrame,
-        conv: DataFrame,
-        med_shingles: int | None = None,
-    ) -> DataFrame:
+    def verify_stage(self, cands: DataFrame, sig: DataFrame, conv: DataFrame,
+                     med_shingles: int | None) -> DataFrame:
+        """`med_shingles` (the median probe) is read only when verify
+        rebuilds; a resuming verify gets None."""
         cfg = self.cfg
 
         def build():
+            cn = self.ckpt.rows_of("cands") or 0
+            use_pref = float(med_shingles) * float(cn) > cfg.prefilter_threshold
+            self.policy = {
+                "median_shingles": int(med_shingles),
+                "candidate_pairs": int(cn),
+                "minhash_prefilter": bool(use_pref),
+            }
             pre = cands
-            use_pref = cfg.use_minhash_prefilter
-            if use_pref is None:
-                med = (
-                    med_shingles
-                    if med_shingles is not None
-                    else self._median_shingles(conv)
-                )
-                cn = self.ckpt.rows_of("cands") or 0
-                use_pref = float(med) * float(cn) > cfg.prefilter_threshold
-                self.policy = {
-                    "median_shingles": int(med),
-                    "candidate_pairs": int(cn),
-                    "minhash_prefilter": bool(use_pref),
-                }
             if use_pref:
                 pre = lsh.verify_pairs(
                     cands, sig, "cid", "sig", b_bits=64 - cfg.p, tau=cfg.tau_pre
                 )
-            sa = conv.select(
-                F.col("cid").alias("a"), F.col("shingles").alias("_sha")
-            )
-            sb = conv.select(
-                F.col("cid").alias("b"), F.col("shingles").alias("_shb")
-            )
+            sa = conv.select(F.col("cid").alias("a"), F.col("shingles").alias("_sha"))
+            sb = conv.select(F.col("cid").alias("b"), F.col("shingles").alias("_shb"))
             inter = F.size(F.array_intersect("_sha", "_shb")).cast("double")
             union = F.size(F.array_union("_sha", "_shb")).cast("double")
             j = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
@@ -284,110 +266,26 @@ class DedupPipeline:
 
     def substr_stage(self, conv: DataFrame) -> DataFrame:
         cfg = self.cfg
-        # invocation-scoped pins: the fingerprint cache and census blocks
-        # are released right after the stage result materializes, without
-        # touching pins owned by any other pipeline in the session
-        local_pins: list[DataFrame] = []
+        # the fingerprint cache and census blocks are scratch pins: the
+        # stage runner releases them once the stage result is materialized
+        return self.ckpt.run("substr", lambda: suffix.substring_pairs(
+            conv, "full_text", "cid", cfg.substring_L, cfg.substring_k,
+            pin=self.ckpt.pin,
+        ))
 
-        def _pin(df: DataFrame) -> DataFrame:
-            df = df.persist()
-            local_pins.append(df)
-            return df
+    def cc_stage(self, conv: DataFrame, exact: DataFrame, verified: DataFrame,
+                 substr: DataFrame) -> tuple[DataFrame, int, int]:
+        """(canonical, cc iterations, cluster count).  CC runs in cid (long)
+        space; labels translate back to conv_id strings only at the very
+        end — two n-row hash joins against the (cid, conv_id) dictionary,
+        AQE-sized.  Timed + materialized as a named stage: VERDICT r3 #5 —
+        the untimed CC/label region is where a 90 s bench regression hid.
+        Non-resumable (labels recompute from the resumed edge stages); its
+        manifest records the iteration count."""
+        edges = exact.select("a", "b").union(verified.select("a", "b"))\
+            .union(substr.select("a", "b"))
 
-        out = self.ckpt.run(
-            "substr",
-            lambda: suffix.substring_pairs(
-                conv, "full_text", "cid", cfg.substring_L, cfg.substring_k,
-                pin=_pin,
-            ),
-        )
-        # the stage result is materialized (pinned or parquet) by ckpt.run;
-        # the internal fingerprint cache has served its three consumers
-        for df in local_pins:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        return out
-
-    def unpersist_all(self) -> None:
-        """Release every block this pipeline pinned (stage caches and the
-        canonical mapping; substr_stage releases its own fingerprint cache).
-        Long-lived sessions embedding the pipeline should call this once
-        the run's outputs are consumed."""
-        self.ckpt.unpersist_all()
-
-    # -- full run ----------------------------------------------------------
-    def run(self, t: DataFrame) -> dict[str, DataFrame]:
-        # a re-run on the same pipeline object must not stack a second set
-        # of pinned stage blocks on top of the first
-        self.ckpt.unpersist_all()
-        return self.run_from_conv(self.conv_stage(t))
-
-    def run_from_conv(self, conv: DataFrame) -> dict[str, DataFrame]:
-        """Every stage after conv, over a materialized conv table
-        (conv_stage's output, or any table with its conv_id, cid,
-        full_text, full_hash, full_hash2 and shingles columns)."""
-        # Overlap independent stage chains (optimization guide §2.6):
-        # substr and exact depend ONLY on conv, while sig -> cands ->
-        # verify is a chain — running them sequentially left most of the
-        # cluster idle in every stage's task tail.  Spark's scheduler runs
-        # concurrent jobs FIFO, so the substr/exact jobs back-fill slots
-        # the chain's stragglers free up.  Stage outputs, counters and
-        # checkpoint layout are identical to the sequential order (each
-        # stage is its own deterministic plan + materialization);
-        # per-stage `seconds` in the log now overlap, so they sum to more
-        # than the pipeline wall.  Measured: 12.8 s -> ~9 s at bench scale
-        # on local[32].
-        from concurrent.futures import ThreadPoolExecutor
-
-        fut_substr = fut_exact = fut_med = None
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            if self.cfg.enable_substring:
-                fut_substr = pool.submit(self.substr_stage, conv)
-            fut_exact = pool.submit(self.exact_stage, conv)
-            if (
-                self.cfg.use_minhash_prefilter is None
-                and not self.ckpt.complete("verify")
-            ):
-                # policy input depends only on conv — overlap it too (only
-                # when verify will rebuild: a resumed verify never reads it)
-                fut_med = pool.submit(self._median_shingles, conv)
-            # the counters stage's conv census (row count + cid injectivity)
-            # also depends only on conv; precompute it here instead of as a
-            # blocking driver job after cc (same latency-hiding rationale)
-            fut_convagg = pool.submit(
-                lambda: conv.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.count_distinct("cid").alias("d"),
-                ).collect()[0]
-            )
-            sig = self.sig_stage(conv)
-            cands = self.cands_stage(sig)
-            if self.cfg.use_simhash_verify:
-                from sketch_spark.operators import simhash as sh_mod
-
-                sims = sh_mod.simhash_signatures_np(conv, "shingles", "cid")
-                cands = sh_mod.hamming_filter(
-                    cands, sims, id_col="cid", max_hamming=self.cfg.simhash_max_hamming
-                ).select("a", "b", "n_bands")
-            verified = self.verify_stage(
-                cands, sig, conv,
-                med_shingles=fut_med.result() if fut_med is not None else None,
-            )
-            exact = fut_exact.result()
-            substr = fut_substr.result() if fut_substr is not None else None
-
-        edges = exact.select("a", "b").union(verified.select("a", "b"))
-        if substr is not None:
-            edges = edges.union(substr.select("a", "b"))
-
-        # CC runs in cid (long) space; translate labels back to conv_id
-        # strings only at the very end — two n-row hash joins against the
-        # (cid, conv_id) dictionary, AQE-sized.  Timed + materialized as a
-        # named stage: VERDICT r3 #5 — the untimed CC/label region is where
-        # a 90 s bench regression hid.
-        def run_cc():
+        def build():
             # lineage barrier through the checkpoint root (shared FS on a
             # cluster) — a driver-local tempdir is invisible to executors
             # in a deployed run (VERDICT r4 what's-wrong #2)
@@ -397,26 +295,20 @@ class DedupPipeline:
             lab = (
                 conv.select("conv_id", "cid")
                 .join(labels.withColumnRenamed("node", "cid"), "cid", "left")
-                .select(
-                    "conv_id",
-                    F.coalesce("cluster_id", F.col("cid")).alias("_ccid"),
-                )
+                .select("conv_id", F.coalesce("cluster_id", F.col("cid")).alias("_ccid"))
             )
-            canon = conv.select(
-                F.col("cid").alias("_ccid"),
-                F.col("conv_id").alias("canonical_conv_id"),
-            )
+            canon = conv.select(F.col("cid").alias("_ccid"),
+                                F.col("conv_id").alias("canonical_conv_id"))
             canonical = self.ckpt.pin(
                 lab.join(canon, "_ccid").select(
                     "conv_id",
                     F.col("canonical_conv_id").alias("cluster_id"),
                     "canonical_conv_id",
-                )
+                ),
+                keep=True,
             )
-            # one materializing action that also returns the cluster count:
-            # the counters stage previously ran a separate
-            # distinct().count() job over the just-cached table — same
-            # number, one less blocking driver job (pure latency).
+            # one materializing action that also returns the cluster count
+            # (no separate distinct().count() job over the cached table).
             # count_distinct skips nulls; the null-conv_id conversation's
             # cluster (cluster_id null) is added back as one more
             crow = canonical.agg(
@@ -430,56 +322,62 @@ class DedupPipeline:
             ).collect()[0]
             return canonical, iters, int(crow.k)
 
-        canonical, iters, n_clusters = self.ckpt.timed("cc", run_cc)
-        # surface the CC stage in the manifest directory next to the
-        # checkpointed stages (non-resumable: labels recompute from the
-        # resumed edge stages, so no data dir is written)
-        self.ckpt.note("cc", {"iterations": int(iters)})
+        return self.ckpt.timed("cc", build, note=lambda out: {"iterations": int(out[1])})
 
-        # lineage counters (north rule §7.6); the one agg also asserts the
-        # cid dictionary encoding is injective this run (hash ids — see
-        # transcripts.conv_table; dense ingest ids replace this at 10^12)
-        def run_counters():
-            cr = fut_convagg.result()  # precomputed in the overlap pool
-            if int(cr.n) != int(cr.d):
+    def counters_stage(self, census: Row,
+                       cc: tuple[DataFrame, int, int]) -> dict[str, int]:
+        """Lineage counters (north rule §7.6).  The census also asserts the
+        cid dictionary encoding is injective this run (hash ids — see
+        transcripts.conv_table; dense ingest ids replace this at 10^12).
+        Pair counts are the row counts the stage materializations already
+        logged (persist+count or parquet manifest), on fresh runs and on
+        resume alike; cc's inputs order this stage after all of them."""
+
+        def count():
+            if int(census.n) != int(census.d):
                 raise AssertionError(
-                    f"cid collision: {cr.n} convs -> {cr.d} distinct cids; "
-                    "assign dense ids at ingest"
+                    f"cid collision: {census.n} convs -> {census.d} distinct "
+                    "cids; assign dense ids at ingest"
                 )
-            # pair counts come from the stage materializations the manager
-            # already performed (persist+count or parquet manifest) — four
-            # recount jobs over multi-million-row cached stages were pure
-            # overhead; rows_of is the same number by definition, on fresh
-            # runs and on resume alike
-            def rows(stage: str, df) -> int:
-                n = self.ckpt.rows_of(stage)
-                return int(n) if n is not None else df.count()
-
-            # under use_simhash_verify the local `cands` is the
-            # hamming-filtered set, NOT the "cands" stage output — count it
+            rows = self.ckpt.rows_of
             return {
-                "convs": int(cr.n),
-                "exact_pairs": rows("exact", exact),
-                "candidate_pairs": (
-                    cands.count()
-                    if self.cfg.use_simhash_verify
-                    else rows("cands", cands)
-                ),
-                "verified_pairs": rows("verify", verified),
-                "substring_pairs": (
-                    rows("substr", substr) if substr is not None else 0
-                ),
-                "cc_iterations": iters,
-                "clusters": n_clusters,
+                "convs": int(census.n),
+                "exact_pairs": rows("exact"),
+                "candidate_pairs": rows("cands"),
+                "verified_pairs": rows("verify"),
+                "substring_pairs": rows("substr"),
+                "cc_iterations": cc[1],
+                "clusters": cc[2],
             }
 
-        self.counters = self.ckpt.timed("counters", run_counters)
-        return {
-            "conv": conv,
-            "sig": sig,
-            "exact": exact,
-            "cands": cands,
-            "verified": verified,
-            "substr": substr,
-            "clusters": canonical,
-        }
+        return self.ckpt.timed("counters", count)
+
+    def unpersist_all(self) -> None:
+        """Release the stage caches and the canonical mapping (scratch
+        blocks go when their stage ends).  Long-lived sessions embedding the
+        pipeline should call this once the run's outputs are consumed."""
+        self.ckpt.unpersist_all()
+
+    # -- full run ----------------------------------------------------------
+    def run(self, t: DataFrame) -> dict[str, DataFrame]:
+        # a re-run on the same pipeline object must not stack a second set
+        # of pinned stage blocks on top of the first
+        self.ckpt.unpersist_all()
+        return self.run_from_conv(self.conv_stage(t))
+
+    def run_from_conv(self, conv: DataFrame) -> dict[str, DataFrame]:
+        """Every stage after conv (STAGES), over a materialized conv table
+        (conv_stage's output, or any table with its conv_id, cid,
+        full_text, full_hash, full_hash2 and shingles columns).  Outputs do
+        not depend on the overlap (each stage is its own deterministic plan
+        + materialization); per-stage `seconds` in the log overlap, so they
+        sum to more than the pipeline wall."""
+        r = self.ckpt.run_stages(
+            [(name, inputs, getattr(self, m)) for name, inputs, m in STAGES],
+            {"conv": conv},
+            wanted=("sig", "exact", "substr", "cands", "verify", "cc", "counters"),
+        )
+        self.counters = r["counters"]
+        return {"conv": conv, "sig": r["sig"], "exact": r["exact"],
+                "cands": r["cands"], "verified": r["verify"],
+                "substr": r["substr"], "clusters": r["cc"][0]}

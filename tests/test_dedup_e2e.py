@@ -2,6 +2,7 @@
 per-turn text-equality invariant, resume idempotence (north rule gates)."""
 
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -87,10 +88,25 @@ def test_clusters_counter_counts_null_conv_id(spark):
         "conv_id string, turn_idx int, role string, text string, tool string, "
         "ts timestamp",
     )
+    # every stage that runs Spark jobs tags them with its name (counters
+    # only reads the row counts the other stages logged)
+    from sketch_spark.operators.dedup import STAGES
+
+    tracker = spark.sparkContext.statusTracker()
+    groups = [name for name, _, _ in STAGES if name != "counters"]
+    before = {g: set(tracker.getJobIdsForGroup(g)) for g in groups}
     pipe = DedupPipeline(spark, DedupConfig())
     assert pipe.run(t)["clusters"].count() == 3
     assert pipe.counters["clusters"] == 3
     pipe.unpersist_all()
+    deadline = time.time() + 30  # job-start events reach the tracker async
+    while True:
+        untagged = [g for g in groups
+                    if not set(tracker.getJobIdsForGroup(g)) - before[g]]
+        if not untagged or time.time() > deadline:
+            break
+        time.sleep(0.1)
+    assert not untagged, f"stages with no job in their group: {untagged}"
 
 
 def test_per_turn_text_equality(result, spark):
@@ -117,6 +133,7 @@ def test_resume_idempotent(spark, corpus, tmp_path):
     p2 = DedupPipeline(spark, DedupConfig(), checkpoint_dir=ck)
     r2 = sorted(map(tuple, p2.run(t)["clusters"].collect()))
     assert r1 == r2
+    assert p2.counters == p1.counters
     # every CHECKPOINTABLE stage resumed; cc/counters are timed_only blocks
     # that legitimately recompute from the resumed stage outputs
     assert all(
