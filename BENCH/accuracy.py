@@ -23,7 +23,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from sketch_spark.operators.minhash import (  # noqa: E402
     EMPTY_REG,
     densify_batch,
-    super_minhash_registers_py,
 )
 from sketch_spark.operators.setsketch import cset_registers_py  # noqa: E402
 
@@ -97,32 +96,28 @@ def main() -> None:
         rows.append((f"bottom-k k={m}", float((e**2).mean()),
                      float(np.abs(e).mean()), float(e.mean())))
 
-    # alternative signature families at m = 512 registers (equal-register
-    # fraction estimators; same planted-J protocol, n = 2^13 per set —
-    # these builders materialize an (n, m) matrix per set, so the protocol
-    # uses smaller sets at the same trial count)
+    # CSetSketch at m = 512 registers (equal-register fraction estimator;
+    # same planted-J protocol, n = 2^13 per set — the builder materializes
+    # an (n, m) matrix per set, so the protocol uses smaller sets at the
+    # same trial count)
     m = 512
-    fam = {"SuperMinHash m=512": [], "CSetSketch m=512": []}
+    est = []
     for _ in range(TRIALS):
         a, b_, tj = planted_pair(rng, 1 << 13, TRUE_J)
-        ra = super_minhash_registers_py(a.astype(np.int64), m)
-        rb = super_minhash_registers_py(b_.astype(np.int64), m)
-        fam["SuperMinHash m=512"].append(float((ra == rb).mean()))
         ca = cset_registers_py(a.astype(np.int64), m)
         cb = cset_registers_py(b_.astype(np.int64), m)
-        fam["CSetSketch m=512"].append(float((ca == cb).mean()))
-    for name, vals in fam.items():
-        e = np.array(vals) - TRUE_J
-        rows.append((name, float((e**2).mean()),
-                     float(np.abs(e).mean()), float(e.mean())))
+        est.append(float((ca == cb).mean()))
+    e = np.array(est) - TRUE_J
+    rows.append(("CSetSketch m=512", float((e**2).mean()),
+                 float(np.abs(e).mean()), float(e.mean())))
 
     out = os.path.join(os.path.dirname(os.path.abspath(__file__)), "accuracy.md")
     with open(out, "w") as f:
         f.write(
             "# Estimator accuracy vs planted J = 1/3\n\n"
             f"{TRIALS} trials x 2^16 elements per set "
-            "(2^13 for the SuperMinHash/CSetSketch rows, whose builders "
-            "materialize an (n, m) matrix) "
+            "(2^13 for the CSetSketch row, whose builder "
+            "materializes an (n, m) matrix) "
             "(reference benchmark/acc.cpp protocol; numpy mirror of the "
             "Spark operators: same register rule, densification, and "
             "collision-corrected estimator).\n\n"

@@ -8,8 +8,6 @@ error so the new tiers ship with numbers, not claims).
 Covers the round-4 additions next to the established HLL tier:
   * ntcard Card (mult.h:178-337) — F0 via the literal report() recursion,
     doubled per the documented halved-law (operators/ntcard.py parity note)
-  * HyperBitBit (hbb.h:16-46, order-defined fold)
-  * HyperHyperBitBit (hbb.h:78-134, sharded, ies harmonic report)
   * HLL p=10 Ertl-improved / Ertl-MLE (the monoidal production tier)
   * PCSA p=6 (pc.h)
 
@@ -57,17 +55,6 @@ def pcsa_estimate(hashes: np.ndarray, p: int) -> float:
     return m / 0.77351 * 2.0 ** ranks.mean()
 
 
-def hhbb_estimate(hashes: np.ndarray, n: int) -> float:
-    shards: dict[int, list[int]] = {}
-    for h in sorted(int(x) for x in hashes):
-        shards.setdefault(h % n, []).append(h // n)
-    tot = 0.0
-    for i in range(n):
-        logn, s1, _ = hll.hyperhyperbitbit_fold(shards.get(i, []))
-        tot += 2.0 ** -(bin(s1).count("1") / 32.0 + 6.43 + logn)
-    return n * n / tot
-
-
 def main() -> None:
     rng = np.random.default_rng(4242)
     fams: dict[str, list[float]] = {}
@@ -88,13 +75,6 @@ def main() -> None:
         )
         fams.setdefault("ntcard r=12 p=4 (2x literal F0)", []).append(
             ntcard_f0(hs, 12, 4) / truth - 1
-        )
-        logn, s1, _ = hll.hyperbitbit_fold(int(h) for h in np.sort(hs))
-        fams.setdefault("HyperBitBit (ordered fold)", []).append(
-            hll.hyperbitbit_estimate(logn, s1) / truth - 1
-        )
-        fams.setdefault("HyperHyperBitBit n=64 (ies)", []).append(
-            hhbb_estimate(hs, 64) / truth - 1
         )
 
     lines = [

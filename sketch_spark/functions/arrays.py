@@ -57,24 +57,6 @@ def bbit_jaccard_col(frac_eq: Column, b: int) -> Column:
     return F.greatest((frac_eq - F.lit(cb)) / F.lit(1.0 - cb), F.lit(0.0))
 
 
-def dot_col(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v.cast("double"),
-    )
-
-
-def norm_col(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + (v * v).cast("double"))
-    )
-
-
-def cosine_col(a: Column, b: Column) -> Column:
-    return dot_col(a, b) / (norm_col(a) * norm_col(b))
-
-
 def sorted_merge_intersect_size_col(a_sorted: Column, b_sorted: Column) -> Column:
     """Intersection size assuming both arrays sorted & distinct — same output
     as intersect_size_col; kept for parity with the reference's merge walk."""
@@ -88,8 +70,5 @@ __all__ = [
     "intersect_size_col",
     "jaccard_exact_col",
     "bbit_jaccard_col",
-    "dot_col",
-    "norm_col",
-    "cosine_col",
     "sorted_merge_intersect_size_col",
 ]

@@ -1,407 +1,24 @@
-"""Approximate nearest-neighbor search over embedding columns.
+"""ShrivastavaHash signatures for sparse fixed-dimension feature vectors.
 
-Three tiers:
-  * brute-force cosine top-k — the exact baseline: broadcast the query set,
-    JVM-side zip_with dot products, window top-k.  Linear scan; correct at
-    any scale where queries are few.
-  * LSH-bucketed (random hyperplane / SRP): sign-bit signatures via a
-    vectorized pandas UDF (one matmul per Arrow batch), candidate
-    generation by signature-band equi-join (same bucket shuffle pattern as
-    the MinHash LSH, capped buckets + per-query maxcand), exact re-rank
-    inside candidates.
-  * IVF (inverted-file index): k-means centroids trained driver-side on a
-    bounded deterministic sample (the centroid table IS the broadcast
-    model — the standard IVF shape), corpus rows assigned to their nearest
-    cell, queries probe their n_probe nearest cells, candidates = cell
-    equi-join, exact re-rank.  Recall is tuned by n_probe; cost stays
-    per-cell, never all-pairs.
-
-All randomness is seeded (numpy PCG64 / xxhash64), so every index is
-reproducible — the engine's determinism contract extends here.
+Reference ShrivastavaHash (mh.h:1009-1177): signature j = the first
+coordinate in hash-j's sampling order that is nonzero in the vector, so
+P[sig_a[j] == sig_b[j]] = Jaccard of the supports.  q35 runs the one
+builder here and checks it against its DuckDB oracle.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from sketch_spark.functions.arrays import cosine_col
 
-
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-) -> DataFrame:
-    """Exact cosine top-k per query (query table broadcast)."""
-    from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv")
-    )
-    c = corpus.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("nv"))
-    scored = (
-        F.broadcast(q)
-        .join(c, F.col("q_id") != F.col("n_id"))
-        .select("q_id", "n_id", cosine_col(F.col("qv"), F.col("nv")).alias("cos"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "rank", "n_id", "cos")
-    )
-
-
-def srp_signatures(
-    vecs: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_bits: int = 64,
-    dim: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """Signed-random-projection signature: bit j = sign(<v, r_j>).
-    One numpy matmul per Arrow batch (mapInPandas)."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, n_bits)).astype(np.float64)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mat = np.stack(pdf[vec_col].map(lambda v: np.asarray(v, dtype=np.float64)))
-            bits = (mat @ planes) > 0
-            sig = np.zeros(len(pdf), dtype=np.uint64)
-            for j in range(n_bits):
-                sig |= bits[:, j].astype(np.uint64) << np.uint64(j)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "srp_sig": sig.astype(np.int64)}
-            )
-
-    id_type = vecs.schema[id_col].dataType.simpleString()
-    return vecs.select(id_col, vec_col).mapInPandas(
-        gen, schema=f"{id_col} {id_type}, srp_sig long"
-    )
-
-
-def srp_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_bits: int = 64,
-    dim: int = 64,
-    band_bits: int = 8,
-    seed: int = 42,
-    bucket_cap: int = 1024,
-    max_cand_per_query: int | None = None,
-) -> DataFrame:
-    """LSH-bucketed ANN: band the SRP signature into n_bits/band_bits bands,
-    equi-join query and corpus bands, exact cosine re-rank of candidates.
-    Recall grows with #bands; cost stays per-bucket.
-
-    Hot-bucket bound (same pattern as lsh.candidate_pairs): corpus members
-    of one (band, bkey) bucket are capped at `bucket_cap`, ranked by a
-    band-diversified deterministic hash — a bucket holding near-duplicate
-    embedding mass (|q∩bucket| x |corpus∩bucket| candidate rows) cannot
-    explode the join, and each corpus vector still gets n_bands independent
-    draws to survive a cap.  `max_cand_per_query` adds the reference's
-    maxcand early stop (ssi.h:387-444): per query keep the top candidates
-    by #matching bands (specificity) before the exact re-rank."""
-    from pyspark.sql import Window
-
-    n_bands = n_bits // band_bits
-    mask = (1 << band_bits) - 1
-
-    def bands(df: DataFrame, prefix: str) -> DataFrame:
-        sig = srp_signatures(df, id_col, vec_col, n_bits, dim, seed)
-        # static band list (shift amounts must be Python ints)
-        band_exprs = F.array(
-            *[
-                F.shiftrightunsigned(F.col("srp_sig"), i * band_bits).bitwiseAND(
-                    F.lit(mask)
-                )
-                for i in range(n_bands)
-            ]
-        )
-        return sig.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            F.posexplode(band_exprs).alias("band", "bkey"),
-        )
-
-    qb = bands(queries, "q")
-    cb = bands(corpus, "n")
-    wcap = Window.partitionBy("band", "bkey").orderBy(
-        F.xxhash64(F.col("n_id"), F.col("band")), F.col("n_id")
-    )
-    cb = (
-        cb.withColumn("_rn", F.row_number().over(wcap))
-        .where(F.col("_rn") <= bucket_cap)
-        .drop("_rn")
-    )
-    cands = (
-        qb.join(cb, ["band", "bkey"])
-        .where(F.col("q_id") != F.col("n_id"))
-        .groupBy("q_id", "n_id")
-        .agg(F.count(F.lit(1)).alias("_nb"))
-    )
-    if max_cand_per_query is not None:
-        wq = Window.partitionBy("q_id").orderBy(F.desc("_nb"), F.asc("n_id"))
-        cands = (
-            cands.withColumn("_rq", F.row_number().over(wq))
-            .where(F.col("_rq") <= max_cand_per_query)
-            .drop("_rq")
-        )
-    cands = cands.drop("_nb")
-    qv = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv"))
-    nv = corpus.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("nv"))
-    scored = (
-        cands.join(F.broadcast(qv), "q_id")
-        .join(nv, "n_id")
-        .select("q_id", "n_id", cosine_col(F.col("qv"), F.col("nv")).alias("cos"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "rank", "n_id", "cos")
-    )
-
-
-def ivf_n_cells_for(n_rows: int) -> int:
-    """The sqrt(n) rule: per-cell membership ~ sqrt(n) balances the probe
-    cost (n_probe * n/n_cells candidates per query) against the assignment
-    cost (n_cells dot products per vector) — FAISS's standard IVF sizing.
-    Clamped to [16, 65536]; beyond 65536 cells (n >> 4*10^9) train
-    hierarchically (coarse cells -> per-cell sub-kmeans) so the driver-side
-    model stays a bounded broadcast."""
-    import math
-
-    return int(min(max(16, round(math.sqrt(max(n_rows, 1)))), 65536))
-
-
-def train_ivf_centroids(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells: int = 16,
-    sample: int | None = None,
-    iters: int = 8,
-    seed: int = 42,
-) -> np.ndarray:
-    """Deterministic k-means coarse quantizer on L2-normalized vectors
-    (spherical k-means == cosine cells).  The training sample is the
-    `sample` rows with the smallest xxhash64(id) — a deterministic uniform
-    sample whose collect is bounded by `sample`, independent of corpus
-    size (the centroid matrix is a tiny broadcast model, the standard IVF
-    deployment shape).
-
-    sample=None sizes the training set PROPORTIONALLY to the model:
-    64 vectors per centroid (VERDICT r3 #6 — a fixed 2,048-row sample
-    under-trains anything past ~32 cells; 64x is within FAISS's 39-256x
-    recommended band), capped BY BYTES, not rows (VERDICT r5 #3: the old
-    2^22-row cap was "~2 GB at dim 64", but real embedding dims are 768+
-    — 25-34 GB on the driver at dim 1024 float64).  The dimension is read
-    from one sample row and the cap is rows*dim*8 <= byte_budget
-    (default 2 GiB, SPARK_GRAFT_IVF_TRAIN_BYTES overrides), with the
-    2^22-row ceiling kept on top.  The update loop is fully vectorized
-    (chunked argmax + np.add.at scatter) so 10^3+ cells train in seconds.
-    """
-    if sample is None:
-        import os
-
-        budget = int(
-            os.environ.get("SPARK_GRAFT_IVF_TRAIN_BYTES", str(2 << 30))
-        )
-        first = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
-        dim = int(first["d"]) if first is not None and first["d"] else 1
-        by_bytes = max(256, budget // max(dim * 8, 1))
-        sample = min(max(2048, 64 * n_cells), 1 << 22, by_bytes)
-    rows = (
-        corpus.select(
-            F.col(vec_col).alias("v"),
-            F.xxhash64(F.col(id_col), F.lit(seed)).alias("_r"),
-        )
-        .orderBy("_r")
-        .limit(sample)
-        .select("v")
-        .collect()
-    )
-    if not rows:
-        raise ValueError(
-            "train_ivf_centroids: empty corpus (nothing to sample)"
-        )
-    x = np.array([r.v for r in rows], dtype=np.float64)
-    x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    rng = np.random.default_rng(seed)
-    k = min(n_cells, len(x))
-    cents = x[rng.choice(len(x), size=k, replace=False)].copy()
-    assign = np.empty(len(x), dtype=np.int64)
-    # chunk the (sample x cells) score matrix to ~128 MB
-    step = max(1, (1 << 24) // max(k, 1))
-    for _ in range(iters):
-        for lo in range(0, len(x), step):
-            assign[lo : lo + step] = np.argmax(x[lo : lo + step] @ cents.T, axis=1)
-        sums = np.zeros_like(cents)
-        np.add.at(sums, assign, x)
-        counts = np.bincount(assign, minlength=k).astype(np.float64)
-        ne = counts > 0
-        upd = sums[ne] / counts[ne, None]
-        cents[ne] = upd / np.maximum(
-            np.linalg.norm(upd, axis=1, keepdims=True), 1e-12
-        )
-    return cents
-
-
-def ivf_assign(
-    vecs: DataFrame,
-    centroids: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_probe: int = 1,
-    prefix: str = "n",
-) -> DataFrame:
-    """-> (<prefix>_id, cell) rows: each vector's n_probe nearest centroids
-    (1 for corpus rows, >1 for query probing).  One matmul per Arrow
-    batch.  n_probe is clamped to the number of trained centroids (a
-    small training sample can yield fewer cells than the requested
-    probes; unclamped, argsort's k columns vs n_probe-repeated ids made
-    the output frame constructor throw)."""
-    cents = centroids.astype(np.float64)
-    probe = max(1, min(n_probe, cents.shape[0]))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mat = np.stack(pdf[vec_col].map(lambda v: np.asarray(v, dtype=np.float64)))
-            mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-            sims = mat @ cents.T
-            top = np.argsort(-sims, axis=1)[:, :probe]
-            yield pd.DataFrame(
-                {
-                    f"{prefix}_id": np.repeat(pdf[id_col].to_numpy(), probe),
-                    "cell": top.ravel().astype(np.int32),
-                }
-            )
-
-    id_type = vecs.schema[id_col].dataType.simpleString()
-    return vecs.select(id_col, vec_col).mapInPandas(
-        gen, schema=f"{prefix}_id {id_type}, cell int"
-    )
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_cells: int | None = 16,
-    n_probe: int = 4,
-    sample: int | None = None,
-    seed: int = 42,
-) -> DataFrame:
-    """IVF ANN: assign corpus to cells, probe each query's n_probe nearest
-    cells, exact cosine re-rank inside the probed cells.  Candidates per
-    query ~ n_probe/n_cells of the corpus — the knob that trades recall
-    for cost; the join is a cell equi-join, never all-pairs.
-
-    n_cells=None applies the sqrt(n) rule (ivf_n_cells_for) from one count
-    of the corpus; sample=None trains on 64 vectors per centroid (see
-    train_ivf_centroids).  100-TB config: n_cells = sqrt(10^9..10^12
-    vectors) lands at the 2^15-2^16 cap with hierarchical training; the
-    centroid matrix stays a <=32 MB broadcast and the per-query candidate
-    set stays ~n_probe*sqrt(n).  Measured recall-vs-n_probe curve at 10^6
-    vectors / 1000 cells: BENCH/accuracy.md (BENCH/ivf_recall.py)."""
-    from pyspark.sql import Window
-
-    if n_cells is None:
-        n_cells = ivf_n_cells_for(corpus.count())
-    cents = train_ivf_centroids(corpus, id_col, vec_col, n_cells, sample, seed=seed)
-    ca = ivf_assign(corpus, cents, id_col, vec_col, n_probe=1, prefix="n")
-    qa = ivf_assign(queries, cents, id_col, vec_col, n_probe=n_probe, prefix="q")
-    cands = (
-        F.broadcast(qa)
-        .join(ca, "cell")
-        .where(F.col("q_id") != F.col("n_id"))
-        .select("q_id", "n_id")
-        .distinct()
-    )
-    qv = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv"))
-    nv = corpus.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("nv"))
-    scored = (
-        cands.join(F.broadcast(qv), "q_id")
-        .join(nv, "n_id")
-        .select("q_id", "n_id", cosine_col(F.col("qv"), F.col("nv")).alias("cos"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "rank", "n_id", "cos")
-    )
-
-
-_SHR_GOLDEN = 0x9E3779B97F4A7C15
-
-
-def shrivastava_signature_np(
-    vecs: DataFrame,
-    indices_col: str = "nz",
-    id_col: str = "vec_id",
-    m: int = 64,
-    out_col: str = "shr_sig",
-) -> DataFrame:
-    """Densified one-permutation signatures for sparse FIXED-DIM feature
-    vectors (reference ShrivastavaHash, mh.h:1009-1177): signature j = the
-    first coordinate in hash-j's sampling order that is nonzero in the
-    vector, so P[sig_a[j] == sig_b[j]] = Jaccard of the supports.
-
-    The reference realizes the sampling order by probing
-    wyhash(seed_j + t) mod ndim for t = 0.. (with an optional precomputed
-    mintime cache); here the order is the rank of WangHash(d, j) over the
-    support — the identical distribution (a uniform random order per
-    register, shared across sketches), without materializing ndim probes.
-    Weighted thresholding (set_threshold) maps to pre-filtering the support
-    upstream.  Input: array<int> of nonzero coordinate indices per row."""
-    from sketch_spark.functions.hashing import wanghash_np
-
-    id_type = vecs.schema[id_col].dataType.simpleString()
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        js = np.arange(m, dtype=np.uint64)
-        for pdf in batches:
-            out = []
-            for nz in pdf[indices_col]:
-                if nz is None or len(nz) == 0:
-                    out.append(None)
-                    continue
-                d = np.asarray(nz, dtype=np.int64).astype(np.uint64)
-                with np.errstate(over="ignore"):
-                    times = wanghash_np(d[:, None] * np.uint64(_SHR_GOLDEN) + js)
-                winners = np.asarray(nz, dtype=np.int64)[np.argmin(times, axis=0)]
-                out.append(winners.tolist())
-            yield pd.DataFrame({id_col: pdf[id_col], out_col: out})
-
-    return vecs.select(id_col, indices_col).mapInPandas(
-        gen, schema=f"{id_col} {id_type}, {out_col} array<long>"
-    )
-
-
-def shrivastava_registers_portable(
-    nz, m: int, dim: int, time_fn
-) -> "Column":
-    """Oracle-checkable variant of `shrivastava_signature_np` (reference
-    ShrivastavaHash, mh.h:1009-1177): register j = the support coordinate
-    with the minimum sampling time, realized with an engine-portable
-    integer `time_fn(d, j)` instead of WangHash ranks (whose uint64
-    wraparound has no portable SQL form — same split as q25's cyclic
-    densify vs the WangHash-probe production path).
+def shrivastava_registers_portable(nz, m: int, dim: int, time_fn) -> Column:
+    """ShrivastavaHash registers over `nz`, an array of the vector's
+    nonzero coordinate indices: register j = the support coordinate with
+    the minimum sampling time `time_fn(d, j)`.  The reference probes
+    wyhash(seed_j + t) mod ndim; an engine-portable integer time gives the
+    same per-register random order without uint64 wraparound, which has no
+    portable SQL form (same split as q25's cyclic densify).
 
     Ties are made unambiguous by minimizing key = time*dim + d (injective
     in d), so Spark and the SQL oracle agree bit-exactly.  Returns an
@@ -413,54 +30,3 @@ def shrivastava_registers_portable(
         return F.transform(nz, lambda d: time_fn(d, F.lit(j)) * dim + d)
 
     return F.array(*[F.array_min(keys_for(j)) % dim for j in range(m)])
-
-
-def embedding_dup_pairs(
-    vecs: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    tau: float = 0.9,
-    n_bits: int = 64,
-    dim: int = 64,
-    band_bits: int = 8,
-    seed: int = 42,
-    bucket_cap: int = 256,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs over ONE table (the
-    training-pipeline dedup operator; the ANN tiers above answer
-    query->corpus top-k instead).
-
-    SRP signatures -> band explode -> lsh.candidate_pairs (the engine's
-    capped-bucket + root-link pair generator, so a bucket holding
-    near-duplicate embedding mass emits O(cap^2 + n) pairs, never n^2) ->
-    exact cosine verify >= tau.  Precision is exact (every emitted pair is
-    re-scored); recall is the SRP collision law: a pair at angle theta
-    collides in >= 1 of n_bits/band_bits bands with probability
-    1 - (1 - (1 - theta/pi)^band_bits)^n_bands, tuned by band_bits.
-    Returns (a, b, cos) with a < b, cos >= tau.
-    """
-    from sketch_spark.operators.lsh import candidate_pairs
-
-    n_bands = n_bits // band_bits
-    mask = (1 << band_bits) - 1
-    sig = srp_signatures(vecs, id_col, vec_col, n_bits, dim, seed)
-    band_exprs = F.array(
-        *[
-            F.shiftrightunsigned(F.col("srp_sig"), i * band_bits).bitwiseAND(
-                F.lit(mask)
-            )
-            for i in range(n_bands)
-        ]
-    )
-    bands = sig.select(
-        F.col(id_col), F.posexplode(band_exprs).alias("band", "key")
-    )
-    cands = candidate_pairs(bands, id_col, bucket_cap)
-    va = vecs.select(F.col(id_col).alias("a"), F.col(vec_col).alias("_va"))
-    vb = vecs.select(F.col(id_col).alias("b"), F.col(vec_col).alias("_vb"))
-    return (
-        cands.join(va, "a")
-        .join(vb, "b")
-        .select("a", "b", cosine_col(F.col("_va"), F.col("_vb")).alias("cos"))
-        .where(F.col("cos") >= tau)
-    )

@@ -16,7 +16,8 @@ Stages (each with counters; the first six checkpointable):
   cc         alternating large/small-star connected components
   clusters   every conv labeled; non-dup convs are their own cluster
 
-DedupPipeline.run(transcripts) builds conv and hands it to run_from_conv.
+DedupPipeline.run(transcripts) builds conv as a stage of its own (its jobs
+tagged "conv") and hands it to run_from_conv.
 Every stage after conv is declared once in STAGES as (name, inputs, stage
 method) and run by CheckpointManager.run_stages: each stage starts on a
 pool thread when its inputs are done, so exact, substr and the two conv
@@ -130,7 +131,8 @@ def document_clusters(
     shingles = F.array_sort(
         F.array_distinct(T.shingle_hashes_col(text, cfg.shingle_n, cfg.seed))
     )
-    conv = pipe.ckpt.run("conv", lambda: docs.select(
+    ckpt = pipe.ckpt
+    conv = ckpt.run_stage("conv", ckpt.run, "conv", lambda: docs.select(
         conv_id.alias("conv_id"), cid, text.alias("full_text"), full_hash,
         full_hash2, shingles.alias("shingles"),
     ))
@@ -363,7 +365,7 @@ class DedupPipeline:
         # a re-run on the same pipeline object must not stack a second set
         # of pinned stage blocks on top of the first
         self.ckpt.unpersist_all()
-        return self.run_from_conv(self.conv_stage(t))
+        return self.run_from_conv(self.ckpt.run_stage("conv", self.conv_stage, t))
 
     def run_from_conv(self, conv: DataFrame) -> dict[str, DataFrame]:
         """Every stage after conv (STAGES), over a materialized conv table

@@ -532,204 +532,3 @@ def pcsa_estimate_col(regs: Column, p: int) -> Column:
         / m
     )
     return F.lit(m * 1.292808) * F.pow(F.lit(2.0), mean)
-
-
-# ---------------------------------------------------------------------------
-# HyperBitBit (hbb.h:17-46; Sedgewick AC11 slides) — the one reference
-# sketch with NO commutative partial+final form: every insert consults the
-# current (logn, s1) state (the promotion cascade), so the fold is
-# inherently sequential and merge/union does not exist.  Provided for API
-# parity as an ORDER-DEFINED sequential fold: callers name the ordering,
-# the fold applies inserts in exactly that order, and equal ordered inputs
-# give equal (logn, s1, s2) words.  For distributed cardinality use the
-# monoidal sketches above (HLL/PCSA); HyperBitBit's niche is tiny-memory
-# (128-bit + counter) per-group estimation over bounded ordered streams.
-# ---------------------------------------------------------------------------
-
-
-def hyperbitbit_fold(hashes) -> tuple[int, int, int]:
-    """Exact HyperBitBit state after inserting `hashes` (64-bit ints,
-    interpreted unsigned) in the given order (hbb.h:28-38): with
-    r = ctz(hv) and k = top 6 bits of hv, every hv with r > logn sets bit
-    k in s1 (and in s2 when r > logn + 1); when s1 exceeds 31 set bits,
-    s1 <- s2, s2 <- 0, logn += 1.  Returns (logn, s1, s2)."""
-    logn, s1, s2 = 5, 0, 0
-    mask = (1 << 64) - 1
-    for hv in hashes:
-        hv &= mask
-        r = (hv & -hv).bit_length() - 1 if hv else 64  # ctz; ctz(0) = 64
-        if r > logn:
-            bit = 1 << (hv >> 58)
-            s1 |= bit
-            if r > logn + 1:
-                s2 |= bit
-            if s1.bit_count() > 31:
-                s1, s2, logn = s2, 0, logn + 1
-    return logn, s1, s2
-
-
-def hyperbitbit_estimate(logn: int, s1: int) -> float:
-    """cardinality_estimate (hbb.h:40-43): 2^(logn + 5.8 + popcount(s1)/32)."""
-    return 2.0 ** (logn + 5.8 + (s1 & ((1 << 64) - 1)).bit_count() / 32.0)
-
-
-def hyperbitbit_groups(
-    df: DataFrame,
-    group_col: str,
-    hash_col: str,
-    ord_col: str | None = None,
-) -> DataFrame:
-    """Per-group HyperBitBit over a DataFrame of hashed elements:
-    (group, hash[, ord]) -> (group, logn, s1, s2, est).
-
-    The fold order is DEFINED as ascending `ord_col` (ties broken by the
-    hash value), or ascending hash value when no ordering column is given —
-    making the result a pure function of the group's multiset + named
-    order, reproducible across runs and partitionings.  Each group's rows
-    are gathered to one task (applyInPandas); that is the honest cost of a
-    non-mergeable sketch — this operator is for MANY bounded groups, not
-    one giant stream (use hll_registers for that).
-
-    Null hashes are dropped Spark-side (see the float64-lift note below),
-    so a group whose hashes are ALL null is ABSENT from the output — it
-    does not return an initial-state row (est ~ 2^10.8) as pre-round-5
-    versions did.  Callers joining estimates back should left-join and
-    treat a missing group as empty.
-    """
-    order = [ord_col, hash_col] if ord_col else [hash_col]
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf[group_col].iloc[0]
-        pdf = pdf.sort_values(order, kind="mergesort")
-        logn, s1, s2 = hyperbitbit_fold(int(h) for h in pdf[hash_col])
-        # store the u64 words as signed i64 (Spark long), two's complement
-        def i64(x: int) -> int:
-            return x - (1 << 64) if x >= (1 << 63) else x
-        return pd.DataFrame(
-            {
-                group_col: [key],
-                "logn": [logn],
-                "s1": [i64(s1)],
-                "s2": [i64(s2)],
-                "est": [hyperbitbit_estimate(logn, s1)],
-            }
-        )
-
-    gt = df.schema[group_col].dataType.simpleString()
-    cols = [group_col, hash_col] + ([ord_col] if ord_col else [])
-    # Null hashes carry no element, and they must be dropped SPARK-side:
-    # a null in an Arrow int64 batch makes pandas lift the whole column to
-    # float64, rounding every hash >= 2^53 before the fold reads its low
-    # (ctz) bits.  Filtering here keeps the pandas column int64.
-    return (
-        df.select(*cols)
-        .where(F.col(hash_col).isNotNull())
-        .groupBy(group_col)
-        .applyInPandas(
-            fold,
-            schema=f"{group_col} {gt}, logn int, s1 long, s2 long, est double",
-        )
-    )
-
-
-def hyperhyperbitbit_fold(quotients) -> tuple[int, int, int]:
-    """Exact per-shard HyperHyperBitBit state (hbb.h:91-110) over the
-    shard's QUOTIENT stream (v // n, in fold order): r = ctz(v); every v
-    with r > logn sets bit ((v >> (r+1)) % 64) in s1 (and s2 when
-    r > logn + 1); when s1 exceeds 31 set bits, s1 <- s2, s2 <- 0,
-    logn += 1.  Differs from plain HyperBitBit in the bit-index rule
-    (quotient bits above the ctz run, not the top-6 bits)."""
-    logn, s1, s2 = 5, 0, 0
-    mask = (1 << 64) - 1
-    for v in quotients:
-        v &= mask
-        r = (v & -v).bit_length() - 1 if v else 64
-        if r > logn:
-            bit = 1 << ((v >> (r + 1)) % 64)
-            s1 |= bit
-            if r > logn + 1:
-                s2 |= bit
-            if s1.bit_count() > 31:
-                s1, s2, logn = s2, 0, logn + 1
-    return logn, s1, s2
-
-
-def hyperhyperbitbit_groups(
-    df: DataFrame,
-    group_col: str,
-    hash_col: str,
-    n: int = 64,
-    ord_col: str | None = None,
-) -> DataFrame:
-    """Per-group HyperHyperBitBit (hbb.h:78-134): n sub-HyperBitBits
-    sharded by hv % n, each folding hv // n — the reference's own answer
-    to HyperBitBit's single-stream statefulness, and exactly the form
-    that distributes: shards are INDEPENDENT order-defined folds
-    (applyInPandas per (group, shard), n-way parallel) followed by a
-    tiny <=n-row per-group combine implementing report() (hbb.h:111-131):
-    cinc_i = popcount(s1_i)/32 + 6.43 + logn_i, est = n^2 / sum(2^-cinc_i)
-    (the `ies` harmonic form report() returns).  Empty shards contribute
-    their initial state (logn=5, s1=0), as in the reference.
-
-    Fold order within a shard is DEFINED as ascending (ord_col, hash)
-    like hyperbitbit_groups — reproducible across runs and partitionings.
-    Output: (group, est) with the per-shard states aggregated away.
-
-    As with hyperbitbit_groups, null hashes are dropped Spark-side, so a
-    group whose hashes are ALL null is ABSENT from the output (no
-    initial-state row); left-join estimates back and treat a missing
-    group as empty.  Shards that are empty within a PRESENT group still
-    contribute their initial state, as in the reference.
-    """
-    order = [ord_col, hash_col] if ord_col else [hash_col]
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf[group_col].iloc[0]
-        shard = int(pdf["_shard"].iloc[0])
-        pdf = pdf.sort_values(order, kind="mergesort")
-        mask = (1 << 64) - 1
-        logn, s1, _ = hyperhyperbitbit_fold(
-            (int(h) & mask) // n for h in pdf[hash_col]
-        )
-        return pd.DataFrame(
-            {group_col: [key], "_shard": [shard], "logn": [logn],
-             "pc": [s1.bit_count()]}
-        )
-
-    gt = df.schema[group_col].dataType.simpleString()
-    cols = [group_col, hash_col] + ([ord_col] if ord_col else [])
-    # unsigned hv % n on signed longs, overflow-free: with u = uint64(hv),
-    # u = (u >>> 1)*2 + (u & 1), so u mod n = ((u>>>1 mod n)*2 + (u&1)) mod n
-    # — every intermediate fits a long and the expression is pure codegen.
-    hv = F.col(hash_col)
-    shard = F.pmod(
-        F.pmod(F.shiftrightunsigned(hv, 1), F.lit(n)) * 2
-        + hv.bitwiseAND(F.lit(1)),
-        F.lit(n),
-    ).cast("int")
-    # Spark-side null-hash drop for the same reason as hyperbitbit_groups:
-    # a null in any (group, shard) Arrow batch would lift the hash column
-    # to float64 and round the quotient stream before its ctz bits.
-    states = (
-        df.select(*cols)
-        .where(hv.isNotNull())
-        .withColumn("_shard", shard)
-        .groupBy(group_col, "_shard")
-        .applyInPandas(
-            fold,
-            schema=f"{group_col} {gt}, _shard int, logn int, pc int",
-        )
-    )
-    # report(): empty shards contribute 2^-(5 + 6.43); n - count(present)
-    # of them.  All codegen: one tiny agg over <= n rows per group.
-    cinc = F.col("pc") / F.lit(32.0) + F.lit(6.43) + F.col("logn")
-    empty_term = F.pow(F.lit(2.0), F.lit(-(5 + 6.43)))
-    return states.groupBy(group_col).agg(
-        (
-            F.lit(float(n * n))
-            / (
-                F.sum(F.pow(F.lit(2.0), -cinc))
-                + (F.lit(n) - F.count(F.lit(1))) * empty_term
-            )
-        ).alias("est")
-    )

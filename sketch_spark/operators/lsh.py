@@ -98,109 +98,6 @@ def candidate_pairs(
     return pairs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("n_bands"))
 
 
-def band_keys_multilevel(
-    sig_df: DataFrame,
-    sig_col: str = "sig",
-    id_col: str = "conv_id",
-    rprs: tuple[int, ...] = (8, 4, 2),
-    m: int = 128,
-) -> DataFrame:
-    """Multi-level ladder (reference ssi.h:85-102: band widths rpr in a pow2
-    ladder; level 0 = widest bands = most specific).  Emits
-    (id, level, band, key); query-side capping prefers lower level numbers
-    = more specific matches, mirroring the most-specific-first walk of
-    ssi.h:385-444."""
-    # NB: F.transform dispatches on the lambda's arity — a default second
-    # parameter would be bound to the array INDEX column, not the default
-    # value.  Bind level/rpr through a real closure instead.
-    def level_keys(level: int, rpr: int):
-        n_bands = m // rpr
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(n_bands - 1)),
-            lambda b: F.xxhash64(
-                F.lit(level), b, F.slice(F.col(sig_col), b * rpr + 1, rpr)
-            ),
-        )
-
-    out = None
-    for level, rpr in enumerate(rprs):
-        lv = sig_df.where(F.col(sig_col).isNotNull()).select(
-            F.col(id_col),
-            F.lit(level).alias("level"),
-            F.posexplode(level_keys(level, rpr)).alias("band", "key"),
-        )
-        out = lv if out is None else out.unionByName(lv)
-    return out
-
-
-def candidate_pairs_capped(
-    bands_df: DataFrame,
-    id_col: str = "conv_id",
-    bucket_cap: int = 64,
-    max_cand_per_item: int | None = None,
-) -> DataFrame:
-    """candidate_pairs plus a distributed analog of the reference's
-    per-item `maxcand` early stop (ssi.h:387-444), preferring
-    more-specific (lower level, then more matched bands) candidates with
-    a deterministic tie-break by partner id.
-
-    Semantics, precisely: a pair survives when EITHER endpoint ranks it
-    within its own top max_cand_per_item — a recall-preserving SUPERSET
-    of the reference's per-query cut (requiring both endpoints would drop
-    a pair the reference keeps whenever only one side is hub-crowded).
-    One item can therefore retain more than max_cand_per_item partners
-    (a hub every neighbor ranks first keeps all of them), but TOTAL pair
-    volume stays <= n * max_cand_per_item because every kept pair is
-    charged to at least one endpoint's bounded list — the bound that
-    matters for cluster-wide verify cost.  Callers needing the strict
-    per-item cut can re-rank the output with the same window."""
-    from pyspark.sql import Window
-
-    has_level = "level" in bands_df.columns
-    group_cols = (["level", "band", "key"] if has_level else ["band", "key"])
-    buckets = (
-        bands_df.groupBy(*group_cols)
-        .agg(F.slice(F.sort_array(F.collect_set(F.col(id_col))), 1, bucket_cap).alias("ids"))
-        .where(F.size("ids") >= 2)
-    )
-    pairs = buckets.select(
-        *([F.col("level")] if has_level else [F.lit(0).alias("level")]),
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("ids") - 1),
-                    lambda i: F.transform(
-                        F.sequence(i + 1, F.size("ids")),
-                        lambda j: F.struct(
-                            F.element_at(F.col("ids"), i).alias("a"),
-                            F.element_at(F.col("ids"), j).alias("b"),
-                        ),
-                    ),
-                )
-            )
-        ).alias("p"),
-    ).select("level", "p.a", "p.b")
-    agg = pairs.groupBy("a", "b").agg(
-        F.count(F.lit(1)).alias("n_bands"), F.min("level").alias("best_level")
-    )
-    if max_cand_per_item is None:
-        return agg
-    wa = Window.partitionBy("a").orderBy(
-        F.asc("best_level"), F.desc("n_bands"), F.asc("b")
-    )
-    wb = Window.partitionBy("b").orderBy(
-        F.asc("best_level"), F.desc("n_bands"), F.asc("a")
-    )
-    return (
-        agg.withColumn("_ra", F.row_number().over(wa))
-        .withColumn("_rb", F.row_number().over(wb))
-        .where(
-            (F.col("_ra") <= max_cand_per_item) | (F.col("_rb") <= max_cand_per_item)
-        )
-        .drop("_ra", "_rb")
-    )
-
-
 def verify_pairs(
     pairs: DataFrame,
     sig_df: DataFrame,

@@ -659,64 +659,6 @@ def expand_weighted_elements(
     ).select(*other, F.xxhash64(F.col("_wh"), F.col("_lvl")).alias(out_col))
 
 
-
-_SMH_G1 = 0xA24BAED4963EE407
-_SMH_G2 = 0x9FB21C651E98DF25
-
-
-def super_minhash_np(
-    df: DataFrame,
-    arr_col: str = "shingles",
-    id_col: str = "conv_id",
-    m: int = 64,
-    out_col: str = "ssig",
-) -> DataFrame:
-    """SuperMinHash (reference bbmh.h:530-758; Ertl arXiv:1706.05698):
-    register j = min over elements e of (u_rank(e) + rank) where each
-    element assigns its m values u_k + k (u_k uniform [0,1)) to registers
-    through a seeded random permutation.  Structured uniforms give strictly
-    lower estimator variance than m independent draws for n < m^2 sets,
-    at identical register-collision law P[eq] = J.
-
-    The reference's incremental a_/b_ early-stop bookkeeping is a
-    sequential-ingest optimization; one numpy batch computes the same
-    distribution directly (argsort of per-(element, slot) hashes is the
-    Fisher-Yates permutation).  Deterministic: equal sets -> equal
-    signatures.  Merge = element-wise min."""
-    id_type = df.schema[id_col].dataType.simpleString()
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for arr in pdf[arr_col]:
-                if arr is None or len(arr) == 0:
-                    out.append(None)
-                    continue
-                out.append(super_minhash_registers_py(arr, m).tolist())
-            yield pd.DataFrame({id_col: pdf[id_col], out_col: out})
-
-    return df.select(id_col, arr_col).mapInPandas(
-        gen, schema=f"{id_col} {id_type}, {out_col} array<double>"
-    )
-
-
-def super_minhash_registers_py(hashes, m: int) -> np.ndarray:
-    """numpy SuperMinHash register builder (shared by the Spark operator
-    and the accuracy harness)."""
-    js = np.arange(m, dtype=np.uint64)
-    hs = np.asarray(hashes, dtype=np.int64).astype(np.uint64)
-    with np.errstate(over="ignore"):
-        pkeys = wanghash_np(hs[:, None] + np.uint64(_SMH_G1) * js)
-        ukeys = wanghash_np(hs[:, None] + np.uint64(_SMH_G2) * js)
-    perm = np.argsort(pkeys, axis=1)  # rank -> register
-    vals = ukeys.astype(np.float64) / 18446744073709551616.0 + np.arange(
-        m, dtype=np.float64
-    )
-    regs = np.full(m, np.inf)
-    np.minimum.at(regs, perm.ravel(), vals.ravel())
-    return regs
-
-
 def kmv_cardinality_col(bottomk: Column, k: int, hash_bits: int = 64) -> Column:
     """KMV estimate (k-1) * range / kth_min — reference mh.h:359-362.
 

@@ -1584,9 +1584,9 @@ GROUP BY g.doc_id, g.i
 
 
 # ---------------------------------------------------------------------------
-# q30 — signed-random-projection signatures over embeddings with
-#        deterministic ±1 (Rademacher) planes — the integer-portable twin of
-#        operators/ann.srp_signatures (gaussian planes, pytest-gated).
+# q30 — signed-random-projection signatures over embeddings: bit j =
+#        sign(<v, r_j>) with deterministic ±1 (Rademacher) planes, so the
+#        projection stays integer-exact and the SQL oracle agrees bit-exactly.
 # ---------------------------------------------------------------------------
 
 SRP_BITS, SRP_DIM = 16, 64

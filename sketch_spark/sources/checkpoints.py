@@ -247,7 +247,7 @@ class CheckpointManager:
                     todo.remove(s)
                     name, inputs, fn = s
                     args = [out.get(i) for i in inputs]
-                    running[pool.submit(self._run_stage, name, fn, args)] = name
+                    running[pool.submit(self.run_stage, name, fn, *args)] = name
                 if not running:
                     raise ValueError(f"stages with unmet inputs: {todo}")
                 finished, _ = wait(running, return_when=FIRST_COMPLETED)
@@ -255,10 +255,11 @@ class CheckpointManager:
                     out[running.pop(f)] = f.result()
         return out
 
-    def _run_stage(self, name: str, fn: Callable[..., object], args: list):
-        """One stage on this thread: its jobs carry the stage name as job
-        group (restored afterwards), and the scratch blocks it pins are
-        released once it returns its materialized output."""
+    def run_stage(self, name: str, fn: Callable[..., object], *args):
+        """`fn(*args)` as one stage on this thread: its jobs carry the
+        stage name as job group (restored afterwards), and the scratch
+        blocks it pins are released once it returns its materialized
+        output."""
         sc = self.spark.sparkContext
         prev = sc.getLocalProperty(JOB_GROUP)
         sc.setLocalProperty(JOB_GROUP, name)

@@ -3,21 +3,9 @@
 The reference is a single-pass streaming *ingestion* engine (every sketch
 supports addh on a live stream; realccm_t adds time decay, mult.h:43-170).
 The dedup north rule is batch-with-checkpoints, so streaming is a side
-surface here — but the monoid property that makes sketches Spark partial
-aggregates makes them streaming aggregates for free.  This module provides
-the two natural pieces:
-
-  * windowed_counts: watermarked sliding-window key counts — the
-    HeavyKeeper/realccm_t "frequency with forgetting" analog (old windows
-    age out instead of exponential decay);
-  * streaming one-perm register updates: groupBy(conv, bucket).min over a
-    stream in update mode — literally the reference's CAS-min register
-    ingestion (bbmh.h:959-969) as a streaming state;
-  * streaming_update_query: the reference's insert-then-query LSH index
-    build (ssi.h:157-209 update_query) as a custom stateful operator
-    (applyInPandasWithState): per-(band, key) bucket state, each arriving
-    signature emits candidate pairs against the members already in its
-    buckets, then joins them — candidates stream out as data streams in.
+surface here: `windowed_counts` gives watermarked sliding-window key
+counts — the HeavyKeeper/realccm_t "frequency with forgetting" analog
+(old windows age out instead of exponential decay).  q41 runs it.
 """
 
 from __future__ import annotations
@@ -44,110 +32,3 @@ def windowed_counts(
         .select("win.start", "win.end", key_col, "cnt")
     )
 
-
-def streaming_one_perm_registers(
-    stream: DataFrame,
-    group_col: str = "conv_id",
-    hash_col: str = "h",
-    p: int = 7,
-) -> DataFrame:
-    """Streaming register table (update mode): min-per-(conv, bucket) over
-    an unbounded stream of shingle hashes — the reference's lock-free
-    streaming addh (bbmh.h:959-969) expressed as a streaming aggregation.
-    Finalization (pivot to a 2^p array + densify) happens in batch at
-    checkpoint time, exactly like the reference's finalize()."""
-    vb = 64 - p
-    mask = (1 << vb) - 1
-    return (
-        stream.select(
-            F.col(group_col),
-            F.shiftrightunsigned(F.col(hash_col), vb).alias("bucket"),
-            F.col(hash_col).bitwiseAND(F.lit(mask)).alias("value"),
-        )
-        .groupBy(group_col, "bucket")
-        .agg(F.min("value").alias("register"))
-    )
-
-
-def streaming_update_query(
-    bands: DataFrame,
-    id_col: str = "conv_id",
-    bucket_cap: int = 64,
-) -> DataFrame:
-    """Streaming insert-then-query (reference update_query, ssi.h:157-209):
-    (id, band, key) band rows stream in; per-(band, key) bucket state holds
-    the member list; every arriving id emits one candidate row per member
-    already in the bucket, then joins it.
-
-    State is bounded: buckets keep at most `bucket_cap` members (arrivals
-    beyond the cap still QUERY — they emit pairs against the retained
-    members, the root-link insight of the batch path — they just aren't
-    inserted, so a boilerplate flood cannot grow state or go quadratic).
-    Downstream dedups (a, b) and verifies exactly like the batch pipeline.
-    Append output mode; exactly-once via the streaming checkpoint.
-
-    Output/state schemas follow the stream's id type (string conv_ids and
-    the batch path's dictionary-encoded long cids both work; min/max pair
-    ordering stays within one type, so it is consistent either way)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    id_type = bands.schema[id_col].dataType.simpleString()
-    np_dtype = np.int64 if id_type in ("bigint", "int") else object
-
-    def fn(key, pdfs, state):
-        members: list = list(state.get[0]) if state.exists else []
-        out_a, out_b = [], []
-        for pdf in pdfs:
-            # .tolist() lifts numpy scalars to plain Python values so the
-            # state tuple serializes identically for long and string ids
-            arriv = pdf[id_col].tolist()
-            if not arriv:
-                continue
-            # membership evolves only by appends (<= bucket_cap of them),
-            # so arrival i's visible member set is exactly the FINAL
-            # list's prefix of the size recorded at its arrival.  The O(n)
-            # bookkeeping loop records prefix sizes; the O(n * members)
-            # pair emission — the loop VERDICT r5 #4 flagged as row-at-a-
-            # time Python — is one numpy broadcast over the ragged
-            # prefixes.
-            snap = np.empty(len(arriv), dtype=np.int64)
-            mset = set(members)
-            for i, cid in enumerate(arriv):
-                snap[i] = len(members)
-                if len(members) < bucket_cap and cid not in mset:
-                    members.append(cid)
-                    mset.add(cid)
-            total = int(snap.sum())
-            if not total:
-                continue
-            mf = np.asarray(members, dtype=np_dtype)
-            rows = np.repeat(np.asarray(arriv, dtype=np_dtype), snap)
-            offs = np.repeat(np.cumsum(snap) - snap, snap)
-            cols = mf[np.arange(total) - offs]
-            keep = cols != rows
-            rows, cols = rows[keep], cols[keep]
-            lo = np.minimum(rows, cols)
-            hi = np.maximum(rows, cols)
-            out_a.append(lo)
-            out_b.append(hi)
-        state.update((members,))
-        a = np.concatenate(out_a) if out_a else np.empty(0, dtype=np_dtype)
-        b = np.concatenate(out_b) if out_b else np.empty(0, dtype=np_dtype)
-        yield pd.DataFrame(
-            {
-                "a": a,
-                "b": b,
-                "band": np.full(len(a), key[0], dtype=np.int64),
-                "key": np.full(len(a), key[1], dtype=np.int64),
-            }
-        )
-
-    return bands.groupBy("band", "key").applyInPandasWithState(
-        fn,
-        outputStructType=f"a {id_type}, b {id_type}, band int, key long",
-        stateStructType=f"ids array<{id_type}>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

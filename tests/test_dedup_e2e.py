@@ -93,7 +93,7 @@ def test_clusters_counter_counts_null_conv_id(spark):
     from sketch_spark.operators.dedup import STAGES
 
     tracker = spark.sparkContext.statusTracker()
-    groups = [name for name, _, _ in STAGES if name != "counters"]
+    groups = ["conv"] + [name for name, _, _ in STAGES if name != "counters"]
     before = {g: set(tracker.getJobIdsForGroup(g)) for g in groups}
     pipe = DedupPipeline(spark, DedupConfig())
     assert pipe.run(t)["clusters"].count() == 3

@@ -158,31 +158,6 @@ def test_one_perm_from_array_fast_equals_exploded(spark):
     assert got == want and "C" not in got and "A" in got and "D" in got
 
 
-def test_super_minhash_collision_law_and_merge(spark):
-    """SuperMinHash (bbmh.h:530-758): register-equality fraction estimates J
-    (same collision law as one-perm, lower variance), and element-wise min
-    of two signatures equals the union's signature bit-exactly."""
-    import numpy as np
-
-    m = 512
-    rng = np.random.default_rng(23)
-    a = [int(v) for v in rng.integers(0, 2**62, 600)]
-    b = a[:360] + [int(v) for v in rng.integers(2**62, 2**63, 240)]
-    u = sorted(set(a) | set(b))
-    true_j = len(set(a) & set(b)) / len(set(a) | set(b))
-    df = spark.createDataFrame(
-        [("a", a), ("b", b), ("u", u), ("e", [])],
-        "conv_id string, shingles array<long>",
-    )
-    got = {r.conv_id: r.ssig for r in MH.super_minhash_np(df, m=m).collect()}
-    assert got["e"] is None
-    frac = sum(1 for x, y in zip(got["a"], got["b"]) if x == y) / m
-    sigma = (true_j * (1 - true_j) / m) ** 0.5
-    assert abs(frac - true_j) <= 3 * sigma, (frac, true_j)
-    merged = np.minimum(np.array(got["a"]), np.array(got["b"]))
-    assert np.array_equal(merged, np.array(got["u"]))
-
-
 def test_one_perm_cardinality_empty_registers_count_as_default_val(spark):
     """Empty (null) registers saw zero elements: their harmonic term is
     the reference's default_val = max register, i.e. (max+1)/range = 1.0.

@@ -34,15 +34,6 @@ def test_column_pruning_in_scan(spark):
     assert read_schema and "text" not in read_schema[0]
 
 
-def test_ann_broadcasts_query_side(spark):
-    from sketch_spark.operators import ann
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = emb.where(F.col("vec_id") < 5)
-    plan = _plan(ann.brute_force_topk(emb, q, k=3))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-
-
 def test_signature_agg_is_partial_final_hash_agg(spark):
     from sketch_spark.operators import minhash
 
