@@ -1,5 +1,5 @@
 """Parity helpers: b-bit truncation, register compress, containment,
-count_gtlt, pHLL quantize, tokenizer parity."""
+LSH bucket cap, count_gtlt, pHLL quantize, tokenizer parity."""
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -78,6 +78,26 @@ def test_containment(spark):
     ).collect()[0]
     assert abs(r.ab - 0.5) < 1e-12
     assert abs(r.ba - 2 / 6) < 1e-12
+
+
+def test_capped_pairs_respects_per_item_cap(spark):
+    from sketch_spark.operators import lsh
+
+    # star: hub collides with 20 spokes in one bucket
+    rows = [("hub", 0, 1)] + [(f"s{i:02d}", 0, 1) for i in range(20)]
+    bands = spark.createDataFrame(rows, "conv_id string, band int, key long")
+    cap = 3
+    pairs = lsh.candidate_pairs(bands, bucket_cap=cap, n_ids=len(rows)).collect()
+    per_item = {}
+    for r in pairs:
+        per_item[r.a] = per_item.get(r.a, 0) + 1
+        per_item[r.b] = per_item.get(r.b, 0) + 1
+    # every member keeps a partner (the star stays one component), members
+    # past the cap link once to the bucket root, and the cap prunes pairs
+    assert set(per_item) == {r[0] for r in rows}
+    assert sorted(per_item.values())[: len(rows) - cap] == [1] * (len(rows) - cap)
+    assert len(pairs) == cap * (cap - 1) // 2 + (len(rows) - cap)
+    assert len(pairs) < 20 * 21 / 2
 
 
 def test_count_gtlt_matches_numpy(spark):

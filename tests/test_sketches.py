@@ -229,6 +229,31 @@ def test_simhash_np_matches_sql(spark):
     assert sql_out == np_out
 
 
+def test_shrivastava_signature_support_jaccard(spark):
+    """ShrivastavaHash (mh.h:1009-1177) through the q35 register builder:
+    register-equality fraction of two sparse vectors' signatures
+    estimates the Jaccard of their supports."""
+    from sketch_spark.operators.ann import shrivastava_registers_portable
+    from sketch_spark.plans.entry_queries import _shr_time
+
+    m, dim = 256, 128
+    a = list(range(0, 60))
+    b = list(range(30, 90))  # |inter|=30, |union|=90
+    true_j = 30 / 90
+    df = spark.createDataFrame(
+        [(1, a), (2, b), (3, a), (4, [])],
+        "vec_id long, nz array<long>",
+    )
+    sig = shrivastava_registers_portable(F.col("nz"), m, dim, _shr_time)
+    got = {r.vec_id: r.shr_sig for r in df.select("vec_id", sig.alias("shr_sig")).collect()}
+    assert got[1] == got[3]  # equal supports -> equal signatures
+    assert got[4] == [None] * m  # empty support -> no winner in any register
+    frac = sum(1 for x, y in zip(got[1], got[2]) if x == y) / m
+    sigma = (true_j * (1 - true_j) / m) ** 0.5
+    assert abs(frac - true_j) <= 3 * sigma, (frac, true_j)
+    assert set(got[1]) <= set(a)
+
+
 def test_pcsa_estimate_and_or_merge(spark):
     """PCSA (pc.h): OR-monoid bitmap registers; merge == union; estimate
     within ~3 * 0.78/sqrt(m) of the truth."""
