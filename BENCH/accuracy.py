@@ -8,7 +8,8 @@ Uses the numpy implementations that mirror the Spark operators exactly
 corrected estimator), fed with uniform random uint64 "hashes" — identical
 to the reference harness feeding raw RNG draws into addh.
 
-Writes BENCH/accuracy.md.
+Rewrites only the block of BENCH/accuracy.md between the BEGIN and END
+marker lines; the archived sections around it are kept byte for byte.
 """
 
 from __future__ import annotations
@@ -29,6 +30,8 @@ from sketch_spark.operators.setsketch import cset_registers_py  # noqa: E402
 TRIALS = 50
 N = 1 << 16
 TRUE_J = 1 / 3
+BEGIN = "<!-- BEGIN BENCH/accuracy.py: generated, rewritten on each run -->\n"
+END = "<!-- END BENCH/accuracy.py -->\n"
 
 
 def one_perm_sig(vals: np.ndarray, p: int) -> np.ndarray:
@@ -69,6 +72,33 @@ def bottomk_jaccard(a, b, k: int) -> float:
     sa, sb = set(ua.tolist()), set(ub.tolist())
     shared = sum(1 for v in union.tolist() if v in sa and v in sb)
     return shared / min(k, len(union))
+
+
+def table(rows) -> str:
+    """The generated block: protocol note + one table row per estimator."""
+    return (
+        f"{TRIALS} trials x 2^16 elements per set "
+        "(2^13 for the CSetSketch row, whose builder "
+        "materializes an (n, m) matrix) "
+        "(reference benchmark/acc.cpp protocol; numpy mirror of the "
+        "Spark operators: same register rule, densification, and "
+        "collision-corrected estimator).\n\n"
+        "| estimator | MSE | mean |err| | bias |\n|---|---|---|---|\n"
+    ) + "".join(
+        f"| {name} | {mse:.2e} | {mae:.4f} | {bias:+.4f} |\n"
+        for name, mse, mae, bias in rows
+    )
+
+
+def splice(text: str, block: str) -> str:
+    """`text` with the lines between its BEGIN and END markers replaced by
+    `block`; everything outside the markers is returned unchanged.  Raises
+    ValueError unless each marker occurs once, BEGIN first, so a file
+    without them is never overwritten."""
+    i, j = text.find(BEGIN), text.find(END)
+    if text.count(BEGIN) != 1 or text.count(END) != 1 or j < i:
+        raise ValueError("accuracy.md needs one BEGIN marker, then one END marker")
+    return text[: i + len(BEGIN)] + block + text[j:]
 
 
 def main() -> None:
@@ -112,19 +142,10 @@ def main() -> None:
                  float(np.abs(e).mean()), float(e.mean())))
 
     out = os.path.join(os.path.dirname(os.path.abspath(__file__)), "accuracy.md")
+    with open(out) as f:
+        text = splice(f.read(), table(rows))
     with open(out, "w") as f:
-        f.write(
-            "# Estimator accuracy vs planted J = 1/3\n\n"
-            f"{TRIALS} trials x 2^16 elements per set "
-            "(2^13 for the CSetSketch row, whose builder "
-            "materializes an (n, m) matrix) "
-            "(reference benchmark/acc.cpp protocol; numpy mirror of the "
-            "Spark operators: same register rule, densification, and "
-            "collision-corrected estimator).\n\n"
-            "| estimator | MSE | mean |err| | bias |\n|---|---|---|---|\n"
-        )
-        for name, mse, mae, bias in rows:
-            f.write(f"| {name} | {mse:.2e} | {mae:.4f} | {bias:+.4f} |\n")
+        f.write(text)
     print(f"wrote {out}")
     for name, mse, mae, bias in rows:
         print(f"{name:24s} mse={mse:.2e} mae={mae:.4f} bias={bias:+.4f}")

@@ -11,8 +11,8 @@ Covers the round-4 additions next to the established HLL tier:
   * HLL p=10 Ertl-improved / Ertl-MLE (the monoidal production tier)
   * PCSA p=6 (pc.h)
 
-Appends a section to BENCH/accuracy.md (accuracy.py owns the top of the
-file; run that first if regenerating from scratch).
+Appends a section to the end of BENCH/accuracy.md (accuracy.py rewrites
+only the block between its markers, so the appended section survives it).
 """
 
 from __future__ import annotations

@@ -39,12 +39,9 @@ def hamming_col(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def intersect_size_col(a: Column, b: Column) -> Column:
-    """Exact intersection size of two arrays — reference isz.h:7-31 analog."""
-    return F.size(F.array_intersect(a, b))
-
-
 def jaccard_exact_col(a: Column, b: Column) -> Column:
+    """Exact Jaccard |a & b| / |a | b| of two distinct-element arrays (0 when
+    both are empty) — the dedup pipeline's verify stage."""
     inter = F.size(F.array_intersect(a, b)).cast("double")
     union = F.size(F.array_union(a, b)).cast("double")
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
@@ -57,18 +54,10 @@ def bbit_jaccard_col(frac_eq: Column, b: int) -> Column:
     return F.greatest((frac_eq - F.lit(cb)) / F.lit(1.0 - cb), F.lit(0.0))
 
 
-def sorted_merge_intersect_size_col(a_sorted: Column, b_sorted: Column) -> Column:
-    """Intersection size assuming both arrays sorted & distinct — same output
-    as intersect_size_col; kept for parity with the reference's merge walk."""
-    return F.size(F.array_intersect(a_sorted, b_sorted))
-
-
 __all__ = [
     "count_eq_col",
     "count_gtlt_col",
     "hamming_col",
-    "intersect_size_col",
     "jaccard_exact_col",
     "bbit_jaccard_col",
-    "sorted_merge_intersect_size_col",
 ]

@@ -8,8 +8,7 @@ Stages (each with counters; the first six checkpointable):
              densification in one map-only numpy kernel (0 shuffles)
   exact      full-text-hash groups -> star edges (catches 0-shingle convs)
   cands      LSH bands (rpr registers/band) -> capped buckets -> pairs
-  verify     MinHash pre-filter (j_est >= tau_pre) when the auto policy in
-             DedupConfig enables it, then EXACT shingle-set Jaccard via
+  verify     EXACT shingle-set Jaccard of every candidate pair via
              array_intersect (conversations are bounded, so the exact set
              fits the row) -> pairs with j >= tau
   substr     winnowing fingerprints -> long-shared-substring pairs
@@ -20,16 +19,17 @@ DedupPipeline.run(transcripts) builds conv as a stage of its own (its jobs
 tagged "conv") and hands it to run_from_conv.
 Every stage after conv is declared once in STAGES as (name, inputs, stage
 method) and run by CheckpointManager.run_stages: each stage starts on a
-pool thread when its inputs are done, so exact, substr and the two conv
-probes (census, median) overlap the sig -> cands -> verify chain, and cc
-and counters follow.  document_clusters (the flagship
+pool thread when its inputs are done, so exact, substr and the conv
+census overlap the sig -> cands -> verify chain, and cc and counters
+follow.  document_clusters (the flagship
 __spark_entry__.entry()) builds a conv table from a flat documents table
 instead — word-level shingles, one document per conversation — and runs
 the same run_from_conv: there is one clustering path.
 
 Scale: candidate generation is the only superlinear risk; it is bounded by
-the deterministic bucket cap + AQE skew handling.  The MinHash pre-filter
-keeps the exact verification join linear in true-ish pairs.
+the deterministic bucket cap + AQE skew handling.  Verify reads two
+shingle arrays per candidate pair, so its bytes are candidate pairs x two
+shingle arrays, with candidates capped per bucket by bucket_cap.
 """
 
 from __future__ import annotations
@@ -41,6 +41,7 @@ from dataclasses import asdict, dataclass
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from sketch_spark.functions.arrays import jaccard_exact_col
 from sketch_spark.operators import cc as cc_mod
 from sketch_spark.operators import lsh, minhash, suffix, transcripts
 from sketch_spark.sources.checkpoints import CheckpointManager
@@ -53,24 +54,6 @@ class DedupConfig:
     p: int = 7  # 2^p = 128 registers
     rpr: int = 2  # registers per band -> m/rpr bands
     bucket_cap: int = 64
-    tau_pre: float = 0.2  # MinHash candidate pre-filter threshold
-    # Exact verify is cheaper on bounded convs (array_intersect is a native
-    # expression; zip_with over 128 registers is an interpreted HOF); the
-    # pre-filter pays only when the exact shingle arrays become the
-    # dominant verify byte stream (VERDICT r3 #4).  Auto policy: enable
-    # when median-shingle-set-size x candidate-count exceeds
-    # prefilter_threshold — both numbers are free (one approx-percentile
-    # agg on the persisted conv table; cands row count from the stage log).
-    # NOTE the pre-filter is a bytes-vs-recall trade, not free: a true
-    # tau=0.5 pair whose 128-register estimate falls below tau_pre=0.2
-    # (~6.8 sigma of register noise, plus empty-bin densification noise on
-    # very small shingle sets) is dropped before the exact verify, so the
-    # SAME corpus can cluster differently above vs below the threshold.
-    # The decision is recorded in DedupPipeline.policy so a caller can
-    # attribute which path produced its output; an infinite threshold pins
-    # exact-only behavior.  See BENCH/BASELINE.md section 7b for the
-    # measured crossover + recall.
-    prefilter_threshold: float = 1.0e9  # measured both ways: BENCH/BASELINE.md §7b
     tau: float = 0.5  # exact-Jaccard acceptance threshold
     substring_L: int = 200
     substring_k: int = 50
@@ -93,16 +76,14 @@ class DedupConfig:
 
 # Every stage after conv: (name, inputs, DedupPipeline method).  The method
 # is called with its inputs' results; the name is the stage's job group and
-# checkpoint key.  census and median are conv probes for counters and the
-# verify policy; median is not started when verify resumes.
+# checkpoint key.  census is a conv probe for the counters stage.
 STAGES = (
     ("sig", ("conv",), "sig_stage"),
     ("exact", ("conv",), "exact_stage"),
     ("substr", ("conv",), "substr_stage"),
     ("census", ("conv",), "_conv_census"),
-    ("median", ("conv",), "_median_shingles"),
     ("cands", ("sig",), "cands_stage"),
-    ("verify", ("cands", "sig", "conv", "median"), "verify_stage"),
+    ("verify", ("cands", "conv"), "verify_stage"),
     ("cc", ("conv", "exact", "verify", "substr"), "cc_stage"),
     ("counters", ("census", "cc"), "counters_stage"),
 )
@@ -154,7 +135,6 @@ class DedupPipeline:
         self.spark = spark
         self.cfg = cfg or DedupConfig()
         self.counters: dict[str, int] = {}
-        self.policy: dict = {}  # auto-decisions taken this run (lineage)
         self.ckpt = CheckpointManager(spark, checkpoint_dir or "",
                                       self.cfg.config_hash(),
                                       enabled=checkpoint_dir is not None)
@@ -225,41 +205,16 @@ class DedupPipeline:
             F.count_distinct("cid").alias("d"),
         ).collect()[0]
 
-    def _median_shingles(self, conv: DataFrame) -> int:
-        """Policy input for the auto prefilter decision — one tiny agg over
-        the persisted conv table, run beside the sig -> cands chain so it
-        is off the verify stage's critical path."""
-        q = conv.agg(F.expr("approx_percentile(size(shingles), 0.5)"))
-        return int(q.collect()[0][0] or 0)
-
-    def verify_stage(self, cands: DataFrame, sig: DataFrame, conv: DataFrame,
-                     med_shingles: int | None) -> DataFrame:
-        """`med_shingles` (the median probe) is read only when verify
-        rebuilds; a resuming verify gets None."""
+    def verify_stage(self, cands: DataFrame, conv: DataFrame) -> DataFrame:
         cfg = self.cfg
 
         def build():
-            cn = self.ckpt.rows_of("cands") or 0
-            use_pref = float(med_shingles) * float(cn) > cfg.prefilter_threshold
-            self.policy = {
-                "median_shingles": int(med_shingles),
-                "candidate_pairs": int(cn),
-                "minhash_prefilter": bool(use_pref),
-            }
-            pre = cands
-            if use_pref:
-                pre = lsh.verify_pairs(
-                    cands, sig, "cid", "sig", b_bits=64 - cfg.p, tau=cfg.tau_pre
-                )
             sa = conv.select(F.col("cid").alias("a"), F.col("shingles").alias("_sha"))
             sb = conv.select(F.col("cid").alias("b"), F.col("shingles").alias("_shb"))
-            inter = F.size(F.array_intersect("_sha", "_shb")).cast("double")
-            union = F.size(F.array_union("_sha", "_shb")).cast("double")
-            j = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
             return (
-                pre.join(sa, "a")
+                cands.join(sa, "a")
                 .join(sb, "b")
-                .withColumn("j_exact", j)
+                .withColumn("j_exact", jaccard_exact_col(F.col("_sha"), F.col("_shb")))
                 .where(F.col("j_exact") >= cfg.tau)
                 .select("a", "b", "n_bands", "j_exact")
             )
@@ -313,16 +268,13 @@ class DedupPipeline:
             # (no separate distinct().count() job over the cached table).
             # count_distinct skips nulls; the null-conv_id conversation's
             # cluster (cluster_id null) is added back as one more
-            crow = canonical.agg(
-                F.count(F.lit(1)).alias("n"),
-                (
-                    F.count_distinct("cluster_id")
-                    + F.coalesce(
-                        F.max(F.col("cluster_id").isNull().cast("int")), F.lit(0)
-                    )
-                ).alias("k"),
-            ).collect()[0]
-            return canonical, iters, int(crow.k)
+            k = canonical.agg(
+                F.count_distinct("cluster_id")
+                + F.coalesce(
+                    F.max(F.col("cluster_id").isNull().cast("int")), F.lit(0)
+                )
+            ).collect()[0][0]
+            return canonical, iters, int(k)
 
         return self.ckpt.timed("cc", build, note=lambda out: {"iterations": int(out[1])})
 

@@ -29,8 +29,8 @@ DEFAULT_SEED = 42
 
 def conv_table(transcripts: DataFrame, n: int = DEFAULT_N, seed: int = DEFAULT_SEED) -> DataFrame:
     """One row per conversation:
-      conv_id, n_turns, full_text (ordered, SEP-joined), full_hash,
-      shingles (sorted DISTINCT xxhash64 array), n_shingles (distinct).
+      conv_id, cid, full_text (ordered, SEP-joined), full_hash, full_hash2,
+      shingles (sorted DISTINCT xxhash64 array).
     """
     turns = F.array_sort(
         F.collect_list(F.struct("turn_idx", "ts", "role", "text"))
@@ -59,12 +59,10 @@ def conv_table(transcripts: DataFrame, n: int = DEFAULT_N, seed: int = DEFAULT_S
     return agg.select(
         "conv_id",
         cid,
-        n_turns.alias("n_turns"),
         full_text.alias("full_text"),
         full_hash,
         full_hash2,
         shingles.alias("shingles"),
-        F.size(shingles).alias("n_shingles"),
     )
 
 
@@ -79,8 +77,9 @@ def conv_keys(
     exchange (64 band rows + ~L/w fingerprint rows per conv, the
     pipeline's dominant byte streams) carries this long instead of the
     string id.  xxhash64 keeps it join-free and deterministic; injectivity
-    is ASSERTED per run (one agg over the persisted conv table,
-    dedup.DedupPipeline.run_from_conv) — at 10^12 convs assign dense ids
+    is ASSERTED per run (the dedup pipeline's census stage counts rows and
+    distinct cids in one agg over the persisted conv table, and its
+    counters stage raises on a mismatch) — at 10^12 convs assign dense ids
     at ingest instead and drop the assert.  The two full-text hashes key
     exact_dup_pairs (see there for why two)."""
     return (
@@ -99,11 +98,10 @@ def exact_dup_pairs(conv: DataFrame, id_col: str = "conv_id") -> DataFrame:
     one xxhash64 alone makes birthday collisions expected at the 10^12-conv
     target (n^2/2^65 ~ thousands of false edges, each transitively merging
     unrelated clusters through connected components); two push the
-    expectation to n^2/2^129 ~ 10^-15.  Falls back to full_hash alone when
-    the caller's table carries no second hash."""
-    keys = ["full_hash", "full_hash2"] if "full_hash2" in conv.columns else ["full_hash"]
+    expectation to n^2/2^129 ~ 10^-15.  Every conv table carries both
+    (conv_keys)."""
     groups = (
-        conv.groupBy(*keys)
+        conv.groupBy("full_hash", "full_hash2")
         .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
         .where(F.size("ids") >= 2)
     )

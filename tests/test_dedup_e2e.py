@@ -61,6 +61,23 @@ def test_recall_and_precision(result, corpus):
     assert not extras, f"unexpected same-cluster pairs: {sorted(extras)[:5]}"
 
 
+def test_verify_is_the_exact_jaccard_filter(result):
+    """verify keeps exactly the candidate pairs whose shingle-set Jaccard
+    is >= tau, and reports that Jaccard as j_exact."""
+    pipe, out, _ = result
+    shingles = {r.cid: set(r.shingles)
+                for r in out["conv"].select("cid", "shingles").collect()}
+    want = []
+    for r in out["cands"].select("a", "b").collect():
+        sa, sb = shingles[r.a], shingles[r.b]
+        j = len(sa & sb) / len(sa | sb) if sa | sb else 0.0
+        if j >= pipe.cfg.tau:
+            want.append((r.a, r.b, j))
+    got = [tuple(r) for r in out["verified"].select("a", "b", "j_exact").collect()]
+    assert want
+    assert sorted(got) == sorted(want)
+
+
 def test_counters_populated(result):
     pipe, _, _ = result
     c = pipe.counters
